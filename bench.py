@@ -379,6 +379,7 @@ def main_default() -> None:
         here = os.path.dirname(os.path.abspath(__file__))
         with open(os.path.join(here, "BENCH", "last_run.json"), "w") as fh:
             json.dump(result, fh, indent=1, sort_keys=True)
+            fh.write("\n")
     except OSError:
         pass
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:22])

@@ -22,7 +22,8 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--pipeline", required=True, help="pipeline spec (yaml/json)")
     p.add_argument("--master", default=None, help="spark master (default local[all])")
     p.add_argument("--shuffle-partitions", type=int, default=None)
-    p.add_argument("--fresh", action="store_true", help="ignore existing ledger (full re-run)")
+    p.add_argument("--fresh", action="store_true",
+                   help="full re-run: delete the ledger, metrics and sinks of out_dir first")
     p.add_argument("--max-buckets", type=int, default=None, help="process at most K pending buckets")
     args = p.parse_args(argv)
 
@@ -35,9 +36,15 @@ def main(argv: list[str] | None = None) -> int:
                       app_name=f"shovel_spark:{spec.name}")
     cfg = spec.job_config()  # F.expr needs an active session (Spark 4)
     if args.fresh:
+        import glob
         import shutil
 
-        shutil.rmtree(f"{cfg.out_dir}/ledger", ignore_errors=True)
+        # without a ledger every run= leaf is uncommitted and would be
+        # deleted anyway; the sinks go too, so that bucket-partitioned
+        # output of earlier versions does not block the run
+        for d in [f"{cfg.out_dir}/ledger", f"{cfg.out_dir}/metrics_by_bucket",
+                  *glob.glob(f"{cfg.out_dir}/sink_*")]:
+            shutil.rmtree(d, ignore_errors=True)
 
     pages = spark.read.parquet(cfg.input_path)
     result = run_resumable(

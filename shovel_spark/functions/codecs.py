@@ -106,12 +106,6 @@ def encode_xml(col: Column, **options: str) -> Column:
     return F.to_xml(col, options or None)
 
 
-# --- noop (reference: src/decoders/noop.js, src/encoders/noop.js)
-
-def decode_noop(col: Column) -> Column:
-    return col
-
-
 # --- multiline (reference: src/decoders/multiline.js:1-18 — WIP/broken in
 # the reference: it emits an empty message and never joins the stack; here
 # the batch form is well-defined: group lines into blank-line-delimited
@@ -409,16 +403,6 @@ def decode_proto_or_json_df(
         out_col, wire_decoder(F.col(payload_col).cast("binary"))
     )
     return json_half.unionByName(wire_half)
-
-
-def decode_protobuf_jvm(col: Column, message_name: str, desc_file_path: str) -> Column:
-    """JVM-side protobuf decode via spark-protobuf, the preferred path on a
-    real cluster where the spark-protobuf package is on the classpath (it
-    stays inside codegen; the pandas path above is the no-classpath
-    fallback and the only runnable one in this sandbox)."""
-    from pyspark.sql.protobuf.functions import from_protobuf
-
-    return from_protobuf(col, message_name, desc_file_path)
 
 
 # --- content-type (reference: src/core/utils.js:69-72 parseContentType;

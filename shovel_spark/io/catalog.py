@@ -1,8 +1,8 @@
 """Source/sink format abstraction — parquet in the sandbox, Iceberg on a
 cluster, same call surface.
 
-The engine's write path already does everything Iceberg needs (partitioned
-writes, dynamic-partition-style replacement, idempotent re-runs); Iceberg
+The engine's write path already does everything Iceberg needs (per-attempt
+writes committed by one ledger append, idempotent re-runs); Iceberg
 upgrades the guarantees (snapshot-atomic commits make the ledger append +
 data write a single transaction via WAP/branch commits) without changing
 any operator code. The sandbox has no Iceberg runtime jar, so the iceberg
@@ -48,25 +48,3 @@ def read_pages(spark: SparkSession, location: str, fmt: str = "parquet") -> Data
         return spark.read.format("iceberg").load(location)
     raise ValueError(f"unknown format: {fmt!r}")
 
-
-def write_table(df: DataFrame, location: str, fmt: str = "parquet",
-                mode: str = "overwrite", partition_cols: list[str] | None = None) -> None:
-    """Partitioned table write; iceberg uses the DataFrameWriterV2 API
-    (writeTo/overwritePartitions — the snapshot-atomic path)."""
-    if fmt == "iceberg":
-        if not iceberg_available(df.sparkSession):
-            raise RuntimeError("iceberg runtime not on the classpath")
-        w = df.writeTo(location)
-        if partition_cols:
-            from pyspark.sql import functions as F
-
-            w = w.partitionedBy(*[F.col(c) for c in partition_cols])
-        if mode == "overwrite":
-            w.createOrReplace()
-        else:
-            w.append()
-        return
-    writer = df.write.mode(mode)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.format(fmt).save(location)

@@ -10,7 +10,9 @@ its elasticsearch output renders a dynamic per-message index name
     N scans of a 100 TB table;
   - dynamic index name ≙ partitioned table writes (partition columns carry
     what the name template carried: date, bucket);
-  - per-doc error isolation ≙ the dead_letter sink receiving rejected rows.
+  - per-doc error isolation ≙ the dead_letter sink receiving rejected rows;
+  - a resumable attempt writes every sink in one job into its own
+    ``run=<run_id>`` leaf per sink (``write_sinks(..., leaf=...)``).
 
 Format is parquet by default; ``format='iceberg'`` plugs in transparently
 when an Iceberg catalog is configured (the sandbox has no Iceberg runtime
@@ -19,13 +21,88 @@ jar — the write path is identical apart from ``writeTo``).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
+import contextlib
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+
+def _payload(payload_format: str, cols: list[str]) -> Column:
+    """The serialized ``payload`` column over ``cols``."""
+    row = F.struct(*cols)
+    if payload_format == "json":
+        return F.to_json(row)
+    if payload_format == "msgpack":
+        from shovel_spark.functions.codecs import encode_msgpack
+
+        return encode_msgpack(row)
+    if payload_format == "json5":
+        from shovel_spark.functions.codecs import encode_json5
+
+        return encode_json5(row)
+    raise ValueError(f"unknown payload_format: {payload_format!r}")
+
+
+#: where a per-attempt write lands before its renames (see _write_leaves)
+STAGE_DIR = "_sink_stage"
+_IX = "__sink_ix"
+
+
+def local_path(path: str, what: str, hint: str = "") -> str:
+    """``path`` as a local filesystem path (a ``file://`` prefix is
+    stripped). Any other URI scheme raises ValueError before anything is
+    written: ``what`` lists, renames and deletes directories from the
+    driver, which a path string on HDFS or an object store does not
+    support."""
+    if "://" in path and not path.startswith("file://"):
+        raise ValueError(f"{what} is local-filesystem-only (got {path!r}){hint}")
+    return path.removeprefix("file://")
+
+
+def _write_leaves(
+    routed: DataFrame,
+    out_dir: str,
+    sinks: list[str],
+    leaf: str,
+    output_cols: list[str] | None,
+    fmt: str,
+    payload_format: str | None,
+) -> dict[str, str]:
+    """Every sink in ONE write job: rows go out partitioned by their sink's
+    position in ``sinks`` into ``{out_dir}/_sink_stage/{leaf}/``, then each
+    sink's directory is renamed to ``{out_dir}/sink_{name}/{leaf}``. The
+    frame is read once, not once per sink, and each write task leaves one
+    file per sink it holds rows for. A sink with no rows gets an empty
+    leaf, as a fan-out write would leave it. The renames make this
+    local-filesystem-only, like the ledger's leaf cleanup."""
+    out_dir = local_path(out_dir, "write_sinks(leaf=...)")
+    cols = list(output_cols) if output_cols else routed.columns
+    ix = F.array_position(F.array(*[F.lit(s) for s in sinks]), F.col("sink"))
+    part = routed.select(*cols, ix.alias(_IX)).filter(F.col(_IX) > 0)
+    if payload_format is not None:
+        part = part.withColumn("payload", _payload(payload_format, cols))
+    stage = os.path.join(out_dir, STAGE_DIR, leaf)
+    # the stage holds this attempt only: pin STATIC overwrite
+    part.write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy(
+        _IX
+    ).format(fmt).save(stage)
+    paths: dict[str, str] = {}
+    for i, name in enumerate(sinks, 1):
+        path = paths[name] = os.path.join(out_dir, f"sink_{name}", leaf)
+        src = os.path.join(stage, f"{_IX}={i}")
+        if os.path.isdir(src):
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            os.rename(src, path)
+        else:
+            part.limit(0).drop(_IX).write.mode("overwrite").format(fmt).save(path)
+    shutil.rmtree(stage)
+    with contextlib.suppress(OSError):
+        os.rmdir(os.path.dirname(stage))
+    return paths
 
 
 def _fanout_write(
@@ -67,27 +144,14 @@ def _fanout_write(
             if c not in keep:
                 keep.append(c)
         part = part.select(*[c for c in keep if c not in drop_cols])
-        if payload_format == "json":
-            part = part.withColumn("payload", F.to_json(F.struct(*[c for c in part.columns])))
-        elif payload_format == "msgpack":
-            from shovel_spark.functions.codecs import encode_msgpack
-
-            part = part.withColumn("payload", encode_msgpack(F.struct(*[c for c in part.columns])))
-        elif payload_format == "json5":
-            from shovel_spark.functions.codecs import encode_json5
-
-            part = part.withColumn("payload", encode_json5(F.struct(*[c for c in part.columns])))
-        elif payload_format is not None:
-            raise ValueError(f"unknown payload_format: {payload_format!r}")
+        if payload_format is not None:
+            part = part.withColumn("payload", _payload(payload_format, part.columns))
         writer = part.write.mode(mode)
         if partition_cols:
             if mode == "overwrite":
-                # pinned per-write: the resume contract ("re-write only the
-                # partitions this run re-processes") requires DYNAMIC
-                # partition overwrite; Spark's default is static, under
-                # which a resumed run would delete every already-done
-                # partition of the sink. Don't depend on ambient session
-                # conf for correctness.
+                # pinned per-write: a partitioned overwrite replaces only
+                # the partitions it writes; Spark's default (static) would
+                # delete every other partition of the sink
                 writer = writer.option("partitionOverwriteMode", "dynamic")
             writer = writer.partitionBy(*partition_cols)
         writer.format(fmt).save(path)
@@ -146,15 +210,11 @@ def compact_parquet(
     Returns {"files_before", "files_after", "bytes"}.
     """
     import glob
-    import shutil
 
-    if "://" in path and not path.startswith("file://"):
-        raise ValueError(
-            f"compact_parquet is local-filesystem-only (got {path!r}); on "
-            "HDFS/object stores use the table format's compaction "
-            "(Iceberg rewrite_data_files)"
-        )
-    path = path.removeprefix("file://").rstrip("/")
+    path = local_path(
+        path, "compact_parquet",
+        "; on HDFS/object stores use the table format's compaction (Iceberg rewrite_data_files)",
+    ).rstrip("/")
     tmp, old = path + "__compacting", path + "__precompact"
 
     # self-heal: a crash between the two renames of a previous run left
@@ -206,6 +266,7 @@ def write_sinks(
     fmt: str = "parquet",
     payload_format: str | None = None,
     max_workers: int | None = None,
+    leaf: str | None = None,
 ) -> dict[str, str]:
     """Write each sink's rows to ``{out_dir}/sink_{name}``; returns paths.
 
@@ -213,8 +274,14 @@ def write_sinks(
     first-match dispatch) and is written once.
 
     ``partition_cols`` (e.g. ``['bucket']`` or ``['dt']``) makes the write
-    dynamic-partition-overwrite-able — the resume path re-writes only the
-    partitions it re-processes.
+    dynamic-partition-overwrite-able: an overwrite replaces only the
+    partitions it writes.
+
+    ``leaf`` (e.g. ``'run=<run_id>'``) writes each sink into its own
+    subdirectory ``{out_dir}/sink_{name}/{leaf}`` — the resumable runner's
+    per-attempt layout, one directory per attempt whatever its buckets —
+    in one write job for all sinks (:func:`_write_leaves`). It refuses
+    ``partition_cols``; ``mode`` and ``max_workers`` do not apply.
 
     ``payload_format='json'|'msgpack'|'json5'`` adds a serialized
     ``payload`` column — the encoder-slot-at-the-sink analog (reference:
@@ -225,6 +292,10 @@ def write_sinks(
     A caller-managed cache is respected: persisting is idempotent but an
     unconditional unpersist here would evict the caller's copy too.
     """
+    if leaf is not None:
+        if partition_cols:
+            raise ValueError("leaf and partition_cols exclude each other")
+        return _write_leaves(routed, out_dir, sinks, leaf, output_cols, fmt, payload_format)
     return _fanout_write(
         routed, out_dir, sinks, lambda name: F.col("sink") == name,
         partition_cols, mode, output_cols, fmt, payload_format,

@@ -10,8 +10,15 @@ which Catalyst fuses into scan + one codegen stage + two broadcast joins —
 predicate pushdown, column pruning (the count-only paths never read ``html``)
 and join planning are free (SURVEY.md §4).
 
-Resume protocol (``run_resumable``): see ledger.py — skip done buckets,
-dynamic-partition-overwrite the rest, ledger-append as commit point.
+Resume protocol (``run_resumable``, ``run_resumable_bucketed``,
+``replay_dead_letters``; details in ledger.py): each call reads the ledger
+once and deletes the leaves of attempts that never committed, skips done
+buckets, writes the rest into per-attempt leaves —
+``sink_<name>/run=<run_id>/`` (``bucket`` a data column; every sink in one
+write job) and one small ``metrics_by_bucket/run=<run_id>/`` file — and
+commits them with one ledger append. Nothing is overwritten, so no call depends on the session's
+partition-overwrite mode. ``run_once`` keeps the ``bucket``-partitioned
+layout.
 """
 
 from __future__ import annotations
@@ -19,22 +26,28 @@ from __future__ import annotations
 import contextlib
 import os
 import re
+import shutil
 import time
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.storagelevel import StorageLevel
 
 from shovel_spark import ledger as L
 from shovel_spark.functions.parse import parse_pages
-from shovel_spark.io.sinks import write_sinks
+from shovel_spark.io.sinks import STAGE_DIR, local_path, write_sinks
 from shovel_spark.operators.aggregate import sink_metrics
 from shovel_spark.operators.enrich import apply_domain_rules, normalize_lang
 from shovel_spark.operators.route import SinkRule, apply_routes, default_sink_rules
 
 #: Columns each sink table carries (html dropped post-parse: at 10^12 rows the
-#: binary column dominates bytes; sinks store extracted fields only).
+#: binary column dominates bytes; sinks store extracted fields only). The
+#: resumable paths also store ``bucket`` as a data column (SINK_COLS).
 OUTPUT_COLS = [
     "uuid",
     "url",
@@ -47,6 +60,7 @@ OUTPUT_COLS = [
     "sink",
     "error",
 ]
+SINK_COLS = OUTPUT_COLS + ["bucket"]
 
 _ENV_RE = re.compile(r"\$\{(\w+)(?::([^}]*))?\}")
 
@@ -161,94 +175,154 @@ def run_resumable(
     ``monitor`` (default on) records live per-stage progress samples to
     ``{out_dir}/progress`` while the run executes — the batch analog of
     the reference's mid-run metrics endpoint (observability.py).
+
+    One call at a time per ``cfg.out_dir``, runs and replays alike: a call
+    deletes the leaves of every attempt that has not committed, a running
+    one's included (ledger.py).
     Returns {run_id, processed_buckets, skipped_buckets}.
     """
+
+    def pending(done: set[int], taken: list[int] | None) -> DataFrame:
+        return _select_buckets(build_routed(pages, lang_map, domain_rules, cfg), done, taken)
+
+    return _run_buckets(
+        spark, cfg, pending, run_id, max_buckets, throttle,
+        lineage or f"pages->{cfg.out_dir}", monitor,
+    )
+
+
+def _select_buckets(df: DataFrame, done: set[int], taken: list[int] | None) -> DataFrame:
+    """Rows of the buckets to process: ``taken`` when the call takes only
+    some of them, else every bucket not done."""
+    if taken is not None:
+        return df.filter(F.col("bucket").isin(taken))
+    return df.filter(~F.col("bucket").isin(sorted(done))) if done else df
+
+
+def _open_out_dir(spark: SparkSession, out_dir: str) -> tuple[str, set[int]]:
+    """Check the output directory, read the ledger once, settle a replay's
+    dead-letter swap and delete every uncommitted ``run=`` leaf; returns
+    (the directory as a local path, the done buckets).
+
+    Refused before anything is written: a remote URI (the leaves are
+    listed, renamed and deleted from the driver), and a table that holds
+    the ``bucket=`` partitions of ``run_once`` or of an earlier version —
+    a reader cannot mix them with ``run=`` leaves."""
+    out_dir = local_path(out_dir, "the resumable runner")
+    tables = [os.path.join(out_dir, "metrics_by_bucket")] + [
+        os.path.join(out_dir, d)
+        for d in (os.listdir(out_dir) if os.path.isdir(out_dir) else [])
+        if d.startswith("sink_") and "__" not in d
+    ]
+    for table in tables:
+        legacy = [d for d in (os.listdir(table) if os.path.isdir(table) else [])
+                  if d.startswith("bucket=")]
+        if legacy:
+            raise ValueError(
+                f"{table} holds bucket-partitioned output ({legacy[0]}) from run_once or "
+                "an earlier version; resumable runs write run=<id> leaves, which a reader "
+                "cannot mix with it. Use a new out_dir, or rerun the CLI with --fresh."
+            )
+    done, committed = L.read_commits(spark, os.path.join(out_dir, "ledger"))
+    _settle_dead_letter_swap(os.path.join(out_dir, "sink_dead_letter"), committed)
+    L.drop_unacked(tables + [os.path.join(out_dir, STAGE_DIR)], committed)
+    return out_dir, done
+
+
+def _run_buckets(
+    spark: SparkSession,
+    cfg: JobConfig,
+    pending_for,
+    run_id: str | None,
+    max_buckets: int | None,
+    throttle: bool,
+    lineage: str,
+    monitor: bool,
+) -> dict:
+    """The resumable run shared by both entry points. ``pending_for(done,
+    taken)`` builds the routed rows of the buckets to process.
+
+    One write job fills the persisted frame and writes every sink's
+    ``run=<run_id>`` leaf; one ``groupBy(bucket, sink, status)`` collect
+    over the cache yields both the ``metrics_by_bucket`` leaf and the
+    ledger's per-bucket counts. The ledger append that follows is the
+    commit point."""
     from shovel_spark.observability import ProgressMonitor
+
     run_id = run_id or L.new_run_id()
-    ledger_dir = os.path.join(cfg.out_dir, "ledger")
-    done = L.read_done_buckets(spark, ledger_dir)
+    run_leaf = L.leaf(run_id)  # rejects an id a reader cannot list safely
+    out_dir, done = _open_out_dir(spark, cfg.out_dir)
+    ledger_dir = os.path.join(out_dir, "ledger")
 
     # the delivery record: every bucket this run intends to process gets an
     # 'attempt' row BEFORE any work — attempts without a 'done' ack make
     # the resume's re-attempt count as nacked = attempts - 1 in
     # metrics_from_ledger (broker-redelivery semantics)
     candidates = sorted(set(range(cfg.n_buckets)) - done)
-    intended = (
-        candidates[:max_buckets] if (throttle and max_buckets is not None) else candidates
-    )
-    L.append_attempts(spark, ledger_dir, run_id, intended)
-
-    routed = build_routed(pages, lang_map, domain_rules, cfg)
-    pending_pred = ~F.col("bucket").isin(sorted(done)) if done else F.lit(True)
-    pending = routed.filter(pending_pred)
-
-    if max_buckets is not None:
-        pending = pending.filter(F.col("bucket").isin(candidates[:max_buckets]))
-
-    # One distributed pass shared by three consumers (sink writes, per-bucket
-    # metrics, ledger counts): repartition by the write's directory-partition
-    # key FIRST (so each consumer inherits the write-aligned layout), then
-    # persist. write_sinks detects the caller-managed cache and will neither
-    # re-persist nor unpersist it.
+    taken = candidates[:max_buckets] if max_buckets is not None else candidates
+    L.append_attempts(spark, ledger_dir, run_id, taken if throttle else candidates)
+    result = {"run_id": run_id, "processed_buckets": taken, "skipped_buckets": sorted(done)}
     t0 = time.time()
-    mon = ProgressMonitor(spark, cfg.out_dir) if monitor else contextlib.nullcontext()
-    pending = pending.repartition("bucket").persist(StorageLevel.MEMORY_AND_DISK)
+    if not taken:
+        return {**result, "elapsed_sec": 0.0}
+
+    pending = pending_for(done, taken if max_buckets is not None else None)
+    pending = pending.persist(StorageLevel.MEMORY_AND_DISK)
+    mon = ProgressMonitor(spark, out_dir) if monitor else contextlib.nullcontext()
     try:
         with mon:
-            write_sinks(
-                pending, cfg.out_dir, cfg.sinks, partition_cols=["bucket"],
-                output_cols=OUTPUT_COLS,
-            )
-            # per-(bucket, sink, status) metric rows, idempotent under
-            # re-runs via the same dynamic-partition-overwrite trick as the
-            # sinks themselves
-            (
-                pending.groupBy("bucket", "sink", "status")
-                .agg(F.count("*").alias("n"))
-                .write.mode("overwrite")
-                # pinned per-write (default is static, which would wipe the
-                # done buckets' metric rows on resume)
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(os.path.join(cfg.out_dir, "metrics_by_bucket"))
-            )
-            counts = (
-                pending.groupBy("bucket")
-                .agg(
-                    F.count("*").alias("in_rows"),
-                    F.sum(F.when(F.col("status") == "acked", 1).otherwise(0)).alias("acked"),
-                    F.sum(F.when(F.col("status") == "ignored", 1).otherwise(0)).alias("ignored"),
-                    F.sum(F.when(F.col("status") == "rejected", 1).otherwise(0)).alias("rejected"),
-                )
-                .collect()
-            )
+            write_sinks(pending, out_dir, cfg.sinks, output_cols=SINK_COLS, leaf=run_leaf)
+            metrics = pending.groupBy("bucket", "sink", "status").agg(F.count("*").alias("n")).collect()
+            _write_bucket_metrics(out_dir, run_id, metrics)
     finally:
         pending.unpersist()
-    bucket_counts = [r.asDict() for r in counts]
     # a processed bucket that held ZERO rows still completed — ack it with
     # zero counts, or it stays pending forever (a throttled caller would
     # re-select it every invocation and never progress past it)
-    processed_slice = candidates[:max_buckets] if max_buckets is not None else candidates
-    seen_buckets = {int(b["bucket"]) for b in bucket_counts}
-    bucket_counts += [
-        {"bucket": b, "in_rows": 0, "acked": 0, "ignored": 0, "rejected": 0}
-        for b in processed_slice
-        if b not in seen_buckets
-    ]
-    if bucket_counts:
-        L.append_ledger(spark, ledger_dir, run_id, bucket_counts, lineage or f"pages->{cfg.out_dir}")
-    return {
-        "run_id": run_id,
-        "processed_buckets": sorted(int(b["bucket"]) for b in bucket_counts),
-        "skipped_buckets": sorted(done),
-        "elapsed_sec": time.time() - t0,
-    }
+    counts = {b: {"bucket": b, "in_rows": 0, "acked": 0, "ignored": 0, "rejected": 0} for b in taken}
+    for r in metrics:
+        c = counts[r["bucket"]]
+        c["in_rows"] += r["n"]
+        if r["status"] in c:
+            c[r["status"]] += r["n"]
+    L.append_ledger(spark, ledger_dir, run_id, list(counts.values()), lineage)
+    return {**result, "elapsed_sec": time.time() - t0}
+
+
+#: ``metrics_by_bucket`` rows: the row count of each (bucket, sink, status)
+#: an attempt wrote; a replay's leaf holds signed deltas
+BUCKET_METRICS_SCHEMA = T.StructType([
+    T.StructField("bucket", T.IntegerType()),
+    T.StructField("sink", T.StringType()),
+    T.StructField("status", T.StringType()),
+    T.StructField("n", T.LongType()),
+])
+
+
+def _write_bucket_metrics(out_dir: str, run_id: str, rows) -> None:
+    """One small file, ``metrics_by_bucket/run=<run_id>/part-00000.parquet``,
+    written from the driver: its rows are already there, and a Spark write
+    of them would cost a job. Until the ledger commits the leaf, a torn
+    file sits in an uncommitted leaf that the next call deletes."""
+    leaf_dir = os.path.join(out_dir, "metrics_by_bucket", L.leaf(run_id))
+    os.makedirs(leaf_dir, exist_ok=True)
+    cols = {c: [r[c] for r in rows] for c in BUCKET_METRICS_SCHEMA.names}
+    pq.write_table(
+        pa.table(cols, schema=to_arrow_schema(BUCKET_METRICS_SCHEMA)),
+        os.path.join(leaf_dir, "part-00000.parquet"),
+    )
 
 
 def sink_metrics_from_buckets(spark: SparkSession, out_dir: str, pipeline: str = "pages") -> DataFrame:
-    """Per-sink metrics rows (METRICS_SCHEMA shape) aggregated from the
-    idempotent per-bucket metric partitions a resumable run maintains."""
-    m = spark.read.parquet(os.path.join(out_dir, "metrics_by_bucket"))
+    """Per-sink metrics rows (METRICS_SCHEMA shape) summed over every
+    ``metrics_by_bucket`` file: each committed run's counts plus each
+    replay's signed deltas. Files are read wherever they sit, so a table
+    written with ``partitionBy("bucket")`` reads the same."""
+    m = (
+        spark.read.schema(BUCKET_METRICS_SCHEMA)
+        .option("recursiveFileLookup", "true")
+        .parquet(os.path.join(out_dir, "metrics_by_bucket"))
+    )
     per = (
         m.filter(F.col("sink").isNotNull())
         .groupBy("sink")
@@ -300,64 +374,15 @@ def run_resumable_bucketed(
     """run_resumable over a bucketed ingest: done buckets are eliminated by
     partition pruning at the scan (assert: PartitionFilters in the plan),
     not by a post-read filter. ``max_buckets``/``throttle`` as in
-    :func:`run_resumable`."""
-    run_id = run_id or L.new_run_id()
-    ledger_dir = os.path.join(cfg.out_dir, "ledger")
-    done = L.read_done_buckets(spark, ledger_dir)
+    :func:`run_resumable`; the write, metrics and commit are shared."""
 
-    # delivery records for the intended buckets (see run_resumable)
-    candidates = sorted(set(range(cfg.n_buckets)) - done)
-    intended = (
-        candidates[:max_buckets] if (throttle and max_buckets is not None) else candidates
+    def pending(done: set[int], taken: list[int] | None) -> DataFrame:
+        pages = _select_buckets(read_bucketed(spark, ingest_path), done, taken)  # prunes partitions
+        return build_routed(pages.drop("bucket"), lang_map, domain_rules, cfg)
+
+    return _run_buckets(
+        spark, cfg, pending, run_id, max_buckets, throttle, f"bucketed:{ingest_path}", True
     )
-    L.append_attempts(spark, ledger_dir, run_id, intended)
-
-    pages = read_bucketed(spark, ingest_path)
-    if done:
-        pages = pages.filter(~F.col("bucket").isin(sorted(done)))  # prunes partitions
-    if max_buckets is not None:
-        pages = pages.filter(F.col("bucket").isin(candidates[:max_buckets]))
-
-    routed = build_routed(pages.drop("bucket"), lang_map, domain_rules, cfg)
-    t0 = time.time()
-    # Same shared-persist pattern as run_resumable: one parse/route pass feeds
-    # both the sink writes and the ledger counts.
-    routed = routed.repartition("bucket").persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        write_sinks(
-            routed, cfg.out_dir, cfg.sinks, partition_cols=["bucket"], output_cols=OUTPUT_COLS
-        )
-        counts = (
-            routed.groupBy("bucket")
-            .agg(
-                F.count("*").alias("in_rows"),
-                F.sum(F.when(F.col("status") == "acked", 1).otherwise(0)).alias("acked"),
-                F.sum(F.when(F.col("status") == "ignored", 1).otherwise(0)).alias("ignored"),
-                F.sum(F.when(F.col("status") == "rejected", 1).otherwise(0)).alias("rejected"),
-            )
-            .collect()
-        )
-    finally:
-        routed.unpersist()
-    bucket_counts = [r.asDict() for r in counts]
-    # a processed bucket that held ZERO rows still completed — ack it with
-    # zero counts, or it stays pending forever (a throttled caller would
-    # re-select it every invocation and never progress past it)
-    processed_slice = candidates[:max_buckets] if max_buckets is not None else candidates
-    seen_buckets = {int(b["bucket"]) for b in bucket_counts}
-    bucket_counts += [
-        {"bucket": b, "in_rows": 0, "acked": 0, "ignored": 0, "rejected": 0}
-        for b in processed_slice
-        if b not in seen_buckets
-    ]
-    if bucket_counts:
-        L.append_ledger(spark, ledger_dir, run_id, bucket_counts, f"bucketed:{ingest_path}")
-    return {
-        "run_id": run_id,
-        "processed_buckets": sorted(int(b["bucket"]) for b in bucket_counts),
-        "skipped_buckets": sorted(done),
-        "elapsed_sec": time.time() - t0,
-    }
 
 
 def metrics_from_ledger(spark: SparkSession, out_dir: str, pipeline: str = "pages") -> DataFrame:
@@ -410,8 +435,9 @@ def run_history(spark: SparkSession, out_dir: str) -> DataFrame:
     (src/core/master.js:183-185), reconstructed from the attempt/done
     records so an operator can see every invocation's footprint (what a
     resume picked up, what a throttled run took, what a crash left behind).
+    Replays commit with a 'replay' row and are not runs: they are left out.
     """
-    led = spark.read.parquet(os.path.join(out_dir, "ledger"))
+    led = spark.read.parquet(os.path.join(out_dir, "ledger")).filter(F.col("status") != "replay")
     return (
         led.groupBy("run_id")
         .agg(
@@ -428,23 +454,21 @@ def run_history(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-#: non-string sink column types (everything else in OUTPUT_COLS is string)
-_OUTPUT_COL_TYPES = {"warc_ts": "timestamp"}
+#: non-string sink column types (everything else in SINK_COLS is string)
+_SINK_COL_TYPES = {"warc_ts": "timestamp", "bucket": "int"}
 
-#: dead-letter sink schema — DERIVED from OUTPUT_COLS (+ the bucket
-#: partition) so the two can't drift apart. Reads use it EXPLICITLY so an
-#: emptied table (all rows replayed) stays readable even though an empty
-#: partitioned write leaves no data files.
-DEAD_LETTER_SCHEMA = (
-    ", ".join(f"{c} {_OUTPUT_COL_TYPES.get(c, 'string')}" for c in OUTPUT_COLS)
-    + ", bucket int"
-)
+#: dead-letter sink schema — DERIVED from SINK_COLS so the two can't drift
+#: apart. Reads use it EXPLICITLY so the table reads the same whatever its
+#: leaves hold, an emptied one (all rows replayed) included.
+DEAD_LETTER_SCHEMA = ", ".join(f"{c} {_SINK_COL_TYPES.get(c, 'string')}" for c in SINK_COLS)
 
 
 def read_dead_letters(spark: SparkSession, out_dir: str) -> DataFrame:
     """The dead-letter table with its explicit schema (safe when empty)."""
-    return spark.read.schema(DEAD_LETTER_SCHEMA).parquet(
-        os.path.join(out_dir, "sink_dead_letter")
+    return (
+        spark.read.schema(DEAD_LETTER_SCHEMA)
+        .option("recursiveFileLookup", "true")
+        .parquet(os.path.join(out_dir, "sink_dead_letter"))
     )
 
 
@@ -472,49 +496,40 @@ def replay_dead_letters(
     ``unmatched`` — replaying against a partial snapshot must not lose
     them).
 
-    Merge semantics: newly-successful rows APPEND to their sinks via the
-    shared fan-out writer (absent before, so one replay adds no
-    duplicates; uuid is the downstream dedupe key if a crashed replay is
-    rerun — at-least-once, like the broker it mirrors); rows that now
-    route to IGNORED leave the set without joining a sink; the
-    still-failing remainder (plus unmatched rows) replaces the
-    dead-letter table via rename-swap, and a crash mid-swap self-heals on
-    the next invocation (the pre-swap copy at ``__replay_old`` is
-    restored, same recipe as compact_parquet). ``metrics_by_bucket`` —
-    when present — is updated for the affected buckets: every matched
-    dead-letter ROW leaves (dead_letter, rejected) and each retried URL
-    re-enters at its new sink/status, keeping the metrics consistent with
-    actual table contents; a would-be-negative count (evidence of a
-    replay that crashed between its metrics write and the swap) raises
-    instead of silently corrupting — and the check runs BEFORE the sink
-    appends, so a detectably-inconsistent prior state aborts without
-    mutating any sink. A second replay under the same
+    Merge semantics, committed as one attempt (see ledger.py):
+
+    - newly-successful rows append to their sinks as a new leaf
+      ``sink_<name>/run=<replay_id>/`` through the shared fan-out writer;
+      rows that now route to IGNORED leave the set without joining a sink;
+    - ``metrics_by_bucket`` gains one leaf of signed deltas: every matched
+      dead-letter ROW leaves (dead_letter, rejected) and each retried URL
+      re-enters at its new (sink, status), so the summed metrics stay
+      equal to the table contents;
+    - the still-failing remainder (plus unmatched rows) is written to
+      ``sink_dead_letter__replay_tmp/run=<replay_id>/``;
+    - one ledger row with ``status='replay'`` commits all three, and only
+      then does the remainder replace the dead-letter table by rename swap.
+
+    A crash before the replay row leaves only uncommitted leaves, which the
+    next run or replay deletes: the dead-letter table is untouched, so the
+    next replay recovers each row exactly once. A crash after it leaves a
+    swap that the next call rolls forward. A second replay under the same
     config retries the remainder, recovers nothing, appends nothing —
-    observable no-op.
+    observable no-op. Like a run, a replay must not overlap another call
+    on the same ``cfg.out_dir`` (ledger.py).
 
     Returns {retried, recovered, ignored, still_dead, unmatched,
     per_sink}. Units: retried/recovered/ignored/still_dead count RETRIED
     URLS (one per url after the keep-latest dedupe); unmatched counts
-    dead-letter ROWS left untouched. A replay that empties the table
-    leaves a partitioned dir with no data files — read it via
-    :func:`read_dead_letters` (explicit schema), not bare
-    ``spark.read.parquet``.
+    dead-letter ROWS left untouched. Read the table back with
+    :func:`read_dead_letters` (explicit schema, safe when emptied).
     """
-    import shutil
-
     from shovel_spark.operators.merge import upsert_latest
 
-    dl_path = os.path.join(cfg.out_dir, "sink_dead_letter")
-    old_dir = dl_path + "__replay_old"
-    tmp = dl_path + "__replay_tmp"
-    # self-heal a replay that crashed mid-swap (same recipe as
-    # compact_parquet): if the canonical path is gone, the pre-swap copy
-    # at __replay_old is authoritative — restore it and retry from scratch
-    if not os.path.exists(dl_path) and os.path.exists(old_dir):
-        os.rename(old_dir, dl_path)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-    dl = read_dead_letters(spark, cfg.out_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    replay_id = L.new_run_id()
+    out_dir, _done = _open_out_dir(spark, cfg.out_dir)
+    dl_path = os.path.join(out_dir, "sink_dead_letter")
+    dl = read_dead_letters(spark, out_dir).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         dl_urls = dl.select("url").where(F.col("url").isNotNull()).distinct()
         matched = pages.join(dl_urls, "url", "left_semi")
@@ -535,121 +550,71 @@ def replay_dead_letters(
             StorageLevel.MEMORY_AND_DISK
         )
         try:
-            recovered = routed.filter(F.col("status") != "rejected")
-            still = routed.filter(F.col("status") == "rejected")
-            # ONE aggregation job over the cached frame yields every
-            # counter (retried/still/per-sink/ignored) the r6 shape
-            # collected with four separate actions
-            status_sink = (
-                routed.groupBy("status", "sink").agg(F.count("*").alias("n")).collect()
+            # ONE aggregation over the cached frame yields every counter
+            # and the metrics delta's re-entering rows
+            plus = routed.groupBy("bucket", "sink", "status").agg(F.count("*").alias("n")).collect()
+            # rows LEAVING the table = every matched dl row (a url that was
+            # dead-lettered twice removes two rows though it retries once)
+            minus = (
+                dl.join(retry_pages.select("url"), "url", "left_semi")
+                .groupBy("bucket").agg(F.count("*").alias("n")).collect()
             )
-            n_retried = sum(int(r["n"]) for r in status_sink)
-            n_still = sum(int(r["n"]) for r in status_sink if r["status"] == "rejected")
-            n_recovered = n_retried - n_still
+            n_retried = sum(r["n"] for r in plus)
+            n_still = sum(r["n"] for r in plus if r["status"] == "rejected")
             per_sink: dict = {}
-            for r in status_sink:
+            for r in plus:
                 if r["status"] != "rejected" and r["sink"] is not None:
-                    per_sink[r["sink"]] = per_sink.get(r["sink"], 0) + int(r["n"])
-            n_ignored = sum(
-                int(r["n"])
-                for r in status_sink
-                if r["status"] != "rejected" and r["sink"] is None
-            )
-            # keep metrics_by_bucket consistent: retried docs leave
-            # (dead_letter, rejected) and re-enter at their new
-            # (sink, status); only affected bucket partitions rewrite.
-            # COMPUTED (and consistency-checked) BEFORE any sink mutation:
-            # the would-go-negative guard below detects a prior replay
-            # that crashed between its metrics write and the dead-letter
-            # swap — that state must abort the run before this one
-            # appends anything, or a rerun re-appends the same recovered
-            # rows (duplicate uuids downstream).
-            updated = None
-            mb_path = os.path.join(cfg.out_dir, "metrics_by_bucket")
-            if os.path.isdir(mb_path):
-                # rows LEAVING the table = every matched dl row (a url that
-                # was dead-lettered twice removes two rows even though it
-                # retries once) — subtract per (bucket), not per retry
-                removed_rows = dl.join(retry_pages.select("url"), "url", "left_semi")
-                affected = (
-                    routed.select("bucket")
-                    .unionByName(removed_rows.select("bucket"))
-                    .distinct()
-                )
-                old = spark.read.parquet(mb_path).join(affected, "bucket", "left_semi")
-                minus = removed_rows.groupBy("bucket").agg(
-                    (-F.count("*")).alias("n")
-                ).select(
-                    "bucket", F.lit("dead_letter").alias("sink"),
-                    F.lit("rejected").alias("status"), "n",
-                )
-                plus = routed.groupBy("bucket", "sink", "status").agg(
-                    F.count("*").alias("n")
-                )
-                updated = (
-                    old.unionByName(minus).unionByName(plus)
-                    .groupBy("bucket", "sink", "status")
-                    .agg(F.sum("n").alias("n"))
-                    .localCheckpoint()  # must not read mb_path while overwriting it
-                )
-                # a negative count means the subtraction ran against
-                # metrics that were ALREADY updated (a replay crashed
-                # after the metrics write but before the dead-letter
-                # swap) — surface it instead of silently dropping rows
-                if updated.filter(F.col("n") < 0).limit(1).count() > 0:
-                    raise RuntimeError(
-                        "metrics_by_bucket would go negative — a prior "
-                        "replay crashed between its metrics update and "
-                        "dead-letter swap; restore metrics_by_bucket from "
-                        "the sinks (sink_metrics_from_buckets inputs) "
-                        "before replaying again"
-                    )
+                    per_sink[r["sink"]] = per_sink.get(r["sink"], 0) + r["n"]
+            n_recovered = n_retried - n_still
+            n_ignored = n_recovered - sum(per_sink.values())
             if per_sink:
-                # the shared fan-out writer: concurrent filtered appends
-                # against one cached frame (write_sinks semantics) — runs
-                # only after the guard above has vouched for the metrics
                 write_sinks(
-                    recovered.filter(F.col("sink").isNotNull()),
-                    cfg.out_dir,
-                    sorted(per_sink),
-                    partition_cols=["bucket"],
-                    mode="append",
-                    output_cols=OUTPUT_COLS,
+                    routed.filter((F.col("status") != "rejected") & F.col("sink").isNotNull()),
+                    out_dir, sorted(per_sink), output_cols=SINK_COLS,
+                    leaf=L.leaf(replay_id),
                 )
-            if updated is not None:
-                (
-                    updated.filter(F.col("n") > 0)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("bucket")
-                    .parquet(mb_path)
-                )
-            # rewrite the remainder (still-failing + unmatched) to a
-            # sibling, then swap via renames; a crash between the renames
-            # leaves the pre-swap copy at __replay_old, which the next
-            # invocation's self-heal restores
-            remainder = still.select(*OUTPUT_COLS, "bucket").unionByName(
-                unmatched.select(*OUTPUT_COLS, "bucket")
-            )
-            (
-                remainder.write.mode("overwrite")
-                .option("partitionOverwriteMode", "static")
-                .partitionBy("bucket")
-                .parquet(tmp)
+            _write_bucket_metrics(out_dir, replay_id, [
+                {"bucket": r["bucket"], "sink": "dead_letter", "status": "rejected", "n": -r["n"]}
+                for r in minus
+            ] + plus)
+            remainder = routed.filter(F.col("status") == "rejected").select(*SINK_COLS)
+            remainder.unionByName(unmatched.select(*SINK_COLS)).write.mode("overwrite").parquet(
+                os.path.join(dl_path + "__replay_tmp", L.leaf(replay_id))
             )
         finally:
             routed.unpersist()
     finally:
         dl.unpersist()
-    shutil.rmtree(old_dir, ignore_errors=True)
-    os.rename(dl_path, old_dir)
-    os.rename(tmp, dl_path)
-    shutil.rmtree(old_dir)
+    L.append_ledger(
+        spark, os.path.join(out_dir, "ledger"), replay_id,
+        [{"bucket": -1, "in_rows": n_retried, "acked": n_recovered - n_ignored,
+          "ignored": n_ignored, "rejected": n_still}],
+        f"replay->{cfg.out_dir}", status="replay",
+    )
+    _settle_dead_letter_swap(dl_path, {replay_id})
     return {
         "retried": n_retried,
         "recovered": n_recovered,
         "ignored": n_ignored,
-        "still_dead": n_retried - n_recovered,
+        "still_dead": n_still,
         "unmatched": n_unmatched,
         "per_sink": per_sink,
     }
+
+
+def _settle_dead_letter_swap(dl_path: str, committed: set[str]) -> None:
+    """Finish or drop a replay's swap of the dead-letter table. The
+    remainder waits at ``__replay_tmp/run=<replay_id>``; once that id is
+    committed it replaces the table, which steps aside to ``__replay_old``
+    until the rename is done. Every step is safe to redo, so a swap cut
+    at any point rolls forward on the next call; a remainder whose replay
+    never committed is deleted."""
+    old, tmp = dl_path + "__replay_old", dl_path + "__replay_tmp"
+    ids = L.leaf_ids(tmp)
+    if ids and ids <= committed:
+        if os.path.exists(dl_path):
+            shutil.rmtree(old, ignore_errors=True)
+            os.rename(dl_path, old)
+        os.rename(tmp, dl_path)
+    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)

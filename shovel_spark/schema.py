@@ -60,7 +60,7 @@ LEDGER_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
         T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),  # done
+        T.StructField("status", T.StringType(), False),  # attempt / done / replay
         T.StructField("in_rows", T.LongType(), False),
         T.StructField("acked", T.LongType(), False),
         T.StructField("nacked", T.LongType(), False),

@@ -29,8 +29,8 @@ DEFAULT_CONF: dict[str, str] = {
     # this environment — verified by bisection; bloom filters alone are the
     # win, the semi-join-reduction rewrite is off)
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-    # Dynamic partition overwrite: the resume path rewrites only the buckets
-    # it re-processes (no double-routing on re-run).
+    # Dynamic partition overwrite as the session default; every writer whose
+    # correctness depends on the mode pins it per write.
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
     # Quieter local runs.
     "spark.ui.enabled": "false",

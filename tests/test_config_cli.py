@@ -84,6 +84,13 @@ def test_cli_end_to_end(spark, tmp_path):
     t = second["totals"]
     assert t["acked"] + t["ignored"] + t["rejected"] == 1500
 
+    # a sink left in the bucket-partitioned layout blocks a resume; --fresh
+    # starts the out dir over
+    os.makedirs(os.path.join(out_dir, "sink_english", "bucket=0"))
+    third = run("--fresh")
+    assert third["processed_buckets"] == 8 and third["totals"]["in_rows"] == 1500
+    assert not any(d.startswith("bucket=") for d in os.listdir(os.path.join(out_dir, "sink_english")))
+
 
 def test_package_zip_importable(tmp_path):
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))

@@ -151,6 +151,36 @@ def test_write_sinks_wide_fanout_max_workers(spark, tmp_path):
         assert all(r.id % 12 == int(name[1:]) for r in rows)
 
 
+def test_write_sinks_leaf_one_job(spark, tmp_path):
+    """``leaf=`` writes every sink in one job into ``sink_<name>/<leaf>``:
+    each leaf holds exactly its sink's rows with ``sink`` kept as a column,
+    rows of unlisted or null sinks go nowhere, a sink without rows gets an
+    empty leaf that still reads, and the staging directory is gone."""
+    import os
+
+    from shovel_spark.io.sinks import STAGE_DIR, write_sinks
+
+    df = spark.range(300).select(
+        F.col("id"),
+        F.when(F.col("id") % 3 == 0, "a").when(F.col("id") % 3 == 1, "b").alias("sink"),
+    )
+    out = str(tmp_path / "leaf")
+    st = spark.sparkContext.statusTracker()
+    jobs_before = len(st.getJobIdsForGroup(None))
+    paths = write_sinks(df, out, ["a", "b", "empty"], leaf="run=r1", payload_format="json")
+    assert len(st.getJobIdsForGroup(None)) - jobs_before == 2  # the write + the empty leaf
+    assert paths == {s: os.path.join(out, f"sink_{s}", "run=r1") for s in ("a", "b", "empty")}
+    for name, mod in (("a", 0), ("b", 1)):
+        rows = spark.read.parquet(paths[name]).collect()
+        assert len(rows) == 100
+        assert all(r.id % 3 == mod and r.sink == name and f'"id":{r.id}' in r.payload for r in rows)
+    empty = spark.read.parquet(paths["empty"])
+    assert empty.count() == 0 and empty.columns == ["id", "sink", "payload"]
+    assert not os.path.exists(os.path.join(out, STAGE_DIR))
+    with pytest.raises(ValueError):
+        write_sinks(df, out, ["a"], leaf="run=r2", partition_cols=["id"])
+
+
 def test_jsonl_file_input_through_decoder_slot(spark, tmp_path):
     """File input + decoder slot end-to-end (reference: file input feeding
     the json decoder): JSON-lines on disk → spark.read.text → decode_json →

@@ -8,8 +8,10 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from shovel_spark.io.sinks import STAGE_DIR
 from shovel_spark.pipeline import JobConfig, metrics_from_ledger, run_resumable
 from shovel_spark.synth import default_domain_rules, default_lang_map, synth_pages
 
@@ -63,7 +65,7 @@ def test_resume_equals_single_run(spark, tmp_path):
 
 def test_rerun_of_unacked_bucket_overwrites_not_appends(spark, tmp_path):
     """Crash between sink write and ledger append: the re-run must replace the
-    bucket's output (dynamic partition overwrite), not double it."""
+    bucket's output (the un-acked leaves are deleted), not double it."""
     pages, lm, dr = _inputs(spark)
     cfg = JobConfig(out_dir=str(tmp_path / "o"), n_buckets=B)
 
@@ -107,7 +109,7 @@ def test_dimension_counts_written_and_salted_equal(spark, tmp_path):
 
 
 def test_per_sink_metrics_survive_resume(spark, tmp_path):
-    """metrics_by_bucket is dynamic-partition-overwritten like the sinks:
+    """metrics_by_bucket is committed with the sinks, one leaf per attempt:
     after crash+resume, per-sink totals equal a single-shot run's."""
     from shovel_spark.pipeline import JobConfig, run_resumable, sink_metrics_from_buckets
 
@@ -240,10 +242,10 @@ def test_progress_monitor_records_stage_samples(spark, tmp_path):
 
 
 def test_resume_survives_default_static_overwrite_session(spark, tmp_path):
-    """The write_sinks/metrics_by_bucket dynamic-overwrite pins must hold
-    WITHOUT the session-level conf (Spark's default is static, under which
-    a resume's partitioned overwrite used to delete every already-done
-    bucket's output). Simulate the vanilla session by unsetting the conf."""
+    """Crash + resume must not depend on the session-level overwrite conf
+    (Spark's default is static, under which a partitioned overwrite deletes
+    every partition it does not write). Simulate the vanilla session by
+    unsetting the conf."""
     from shovel_spark.pipeline import JobConfig, metrics_from_ledger, run_resumable
     from shovel_spark.synth import default_domain_rules, default_lang_map, synth_pages
 
@@ -405,3 +407,273 @@ def test_replay_preserves_unmatched_and_dedupes_recrawled_urls(spark, tmp_path):
             name = d[len("sink_"):]
             got = spark.read.parquet(_os.path.join(out, d)).count()
             assert m.get(name, 0) == got, (name, m.get(name), got)
+
+
+# -- the per-attempt layout: crash windows against an uninterrupted run ------
+
+
+def test_run_ids_read_back_as_strings():
+    """A run=<id> leaf is typed by partition discovery; an id in numeric
+    exponent form stalls it, so ids must start with a letter."""
+    from shovel_spark import ledger
+
+    assert all(ledger.new_run_id()[0].isalpha() for _ in range(100))
+    with pytest.raises(ValueError, match="start with a letter"):
+        ledger.leaf("123e45678901")
+
+
+def _sink_frames(spark, out_dir):
+    """{sink name: DataFrame} of every sink table under ``out_dir``."""
+    from shovel_spark.pipeline import read_dead_letters
+
+    return {
+        d[len("sink_"):]: (
+            read_dead_letters(spark, out_dir) if d == "sink_dead_letter"
+            else spark.read.parquet(os.path.join(out_dir, d))
+        )
+        for d in sorted(os.listdir(out_dir))
+        if d.startswith("sink_") and "__" not in d
+    }
+
+
+def _assert_metrics_match_sinks(spark, out_dir):
+    """sink_metrics_from_buckets equals the sink contents, and no sink
+    holds a uuid twice."""
+    from shovel_spark.pipeline import sink_metrics_from_buckets
+
+    counts = {}
+    for name, df in _sink_frames(spark, out_dir).items():
+        n = df.count()
+        assert n == df.select("uuid").distinct().count(), name
+        if n:
+            counts[name] = n
+    metrics = {r["sink"]: r["in_rows"] for r in sink_metrics_from_buckets(spark, out_dir).collect()
+               if r["in_rows"]}
+    assert metrics == counts
+
+
+def _sink_url_sets(spark, out_dir):
+    return {name: {r.url for r in df.select("url").collect()}
+            for name, df in _sink_frames(spark, out_dir).items()}
+
+
+def _unacked_leaves(spark, out_dir):
+    """``run=`` leaves whose run id has no done or replay ledger row."""
+    led = spark.read.parquet(os.path.join(out_dir, "ledger"))
+    committed = {r.run_id for r in led.filter(F.col("status").isin("done", "replay")).collect()}
+    tables = [os.path.join(out_dir, d) for d in os.listdir(out_dir)
+              if d.startswith("sink_") or d in ("metrics_by_bucket", STAGE_DIR)]
+    return [os.path.join(t, n) for t in tables for n in os.listdir(t)
+            if n.startswith("run=") and n[len("run="):] not in committed]
+
+
+def _fail_once(monkeypatch, status):
+    """Make the next ledger append of ``status`` rows raise, as a crash
+    just before that commit would."""
+    from shovel_spark import ledger
+
+    real, calls = ledger.append_ledger, []
+
+    def flaky(*args, **kw):
+        if kw.get("status", "done") == status and not calls:
+            calls.append(1)
+            raise RuntimeError("crash before the ledger append")
+        return real(*args, **kw)
+
+    monkeypatch.setattr(ledger, "append_ledger", flaky)
+
+
+def test_crash_before_ledger_append_then_resume(spark, tmp_path, monkeypatch):
+    """A run dies after its sink and metrics writes but before its ack: the
+    resume deletes the un-acked leaves and redoes their buckets, so the
+    sinks and metrics equal an uninterrupted run's."""
+    pages, lm, dr = _inputs(spark)
+    golden = JobConfig(out_dir=str(tmp_path / "golden"), n_buckets=B)
+    run_resumable(spark, pages, lm, dr, golden)
+
+    cfg = JobConfig(out_dir=str(tmp_path / "crashed"), n_buckets=B)
+    run_resumable(spark, pages, lm, dr, cfg, max_buckets=3)
+    _fail_once(monkeypatch, "done")
+    with pytest.raises(RuntimeError, match="crash before the ledger append"):
+        run_resumable(spark, pages, lm, dr, cfg)
+    assert len(_unacked_leaves(spark, cfg.out_dir)) == len(cfg.sinks) + 1  # sinks + metrics
+    r = run_resumable(spark, pages, lm, dr, cfg)
+    assert len(r["processed_buckets"]) == B - 3
+
+    assert _unacked_leaves(spark, cfg.out_dir) == []
+    assert _sink_url_sets(spark, cfg.out_dir) == _sink_url_sets(spark, golden.out_dir)
+    _assert_metrics_match_sinks(spark, cfg.out_dir)
+    m = metrics_from_ledger(spark, cfg.out_dir).first()
+    gm = metrics_from_ledger(spark, golden.out_dir).first()
+    assert (m["in_rows"], m["acked"], m["ignored"], m["rejected"]) == (
+        gm["in_rows"], gm["acked"], gm["ignored"], gm["rejected"])
+    # the B-3 pending buckets were delivered three times before their ack
+    assert m["nacked"] == 2 * (B - 3)
+
+
+def test_crash_between_sink_renames_then_resume(spark, tmp_path, monkeypatch):
+    """A run dies between the renames that move its one-job sink write out
+    of the staging directory: some sinks' leaves are in place, the rest
+    are still staged. The resume deletes both, and its sinks and metrics
+    equal an uninterrupted run's."""
+    pages, lm, dr = _inputs(spark)
+    golden = JobConfig(out_dir=str(tmp_path / "golden"), n_buckets=B)
+    run_resumable(spark, pages, lm, dr, golden)
+
+    cfg = JobConfig(out_dir=str(tmp_path / "crashed"), n_buckets=B)
+    real, renames = os.rename, []
+
+    def flaky(src, dst):
+        if STAGE_DIR in str(src):
+            renames.append(src)
+            if len(renames) == 3:
+                raise RuntimeError("crash between the sink renames")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "rename", flaky)
+    with pytest.raises(RuntimeError, match="crash between the sink renames"):
+        run_resumable(spark, pages, lm, dr, cfg)
+    monkeypatch.undo()
+    left = _unacked_leaves(spark, cfg.out_dir)
+    assert len([p for p in left if STAGE_DIR in p]) == 1
+    assert len(left) == 3  # two renamed sink leaves + the staged rest
+    run_resumable(spark, pages, lm, dr, cfg)
+
+    assert _unacked_leaves(spark, cfg.out_dir) == []
+    assert _sink_url_sets(spark, cfg.out_dir) == _sink_url_sets(spark, golden.out_dir)
+    _assert_metrics_match_sinks(spark, cfg.out_dir)
+
+
+def test_replay_crash_before_commit_recovers_each_row_once(spark, tmp_path, monkeypatch):
+    """A replay dies after writing its recovered rows, metrics delta and
+    remainder, but before its 'replay' ledger row: the dead-letter table is
+    untouched, and the next replay recovers each row exactly once — the
+    same outcome as one uninterrupted replay."""
+    from shovel_spark.pipeline import read_dead_letters, replay_dead_letters
+
+    pages, lm, dr = _inputs(spark)
+    allow_all = dr.withColumn("action", F.lit("allow"))
+    outs = {}
+    for tag in ("golden", "crashed"):
+        cfg = JobConfig(out_dir=str(tmp_path / tag), n_buckets=B)
+        run_resumable(spark, pages, lm, dr, cfg)
+        outs[tag] = cfg
+    dead0 = read_dead_letters(spark, outs["crashed"].out_dir).count()
+
+    want = replay_dead_letters(spark, pages, lm, allow_all, outs["golden"])
+    assert want["recovered"] > 0
+    _fail_once(monkeypatch, "replay")
+    with pytest.raises(RuntimeError, match="crash before the ledger append"):
+        replay_dead_letters(spark, pages, lm, allow_all, outs["crashed"])
+    assert read_dead_letters(spark, outs["crashed"].out_dir).count() == dead0
+    got = replay_dead_letters(spark, pages, lm, allow_all, outs["crashed"])
+    assert got == want
+
+    crashed = outs["crashed"].out_dir
+    assert _unacked_leaves(spark, crashed) == []
+    assert not any("__replay" in d for d in os.listdir(crashed))
+    assert _sink_url_sets(spark, crashed) == _sink_url_sets(spark, outs["golden"].out_dir)
+    _assert_metrics_match_sinks(spark, crashed)
+
+
+def test_replay_that_empties_dead_letters(spark, tmp_path):
+    """Every dead letter recovers: the emptied table still reads through
+    read_dead_letters, and a run after it writes into the same layout."""
+    from shovel_spark.pipeline import read_dead_letters, replay_dead_letters
+
+    pages, lm, dr = _inputs(spark)
+    probe = JobConfig(out_dir=str(tmp_path / "probe"), n_buckets=B)
+    run_resumable(spark, pages, lm, dr, probe)
+    # keep only pages whose dead-lettering is a rule deny (parse failures
+    # stay dead under any rules)
+    parse_failed = read_dead_letters(spark, probe.out_dir).filter(
+        ~F.col("error").startswith("domain_rule:deny")).select("url")
+    clean = pages.join(parse_failed, "url", "left_anti")
+
+    cfg = JobConfig(out_dir=str(tmp_path / "o"), n_buckets=B)
+    run_resumable(spark, clean, lm, dr, cfg, max_buckets=4)
+    res = replay_dead_letters(spark, clean, lm, dr.withColumn("action", F.lit("allow")), cfg)
+    assert res["retried"] == res["recovered"] > 0 and res["still_dead"] == 0
+    assert read_dead_letters(spark, cfg.out_dir).count() == 0
+    _assert_metrics_match_sinks(spark, cfg.out_dir)
+    run_resumable(spark, clean, lm, dr, cfg)  # the rest, after the replay
+    assert read_dead_letters(spark, cfg.out_dir).count() > 0
+    _assert_metrics_match_sinks(spark, cfg.out_dir)
+
+
+def test_bucketed_run_then_replay_metrics_match_sinks(spark, tmp_path):
+    """run_resumable_bucketed commits metrics_by_bucket like run_resumable,
+    so sink_metrics_from_buckets holds after the run and after a replay."""
+    from shovel_spark.pipeline import ingest_bucketed, replay_dead_letters, run_resumable_bucketed
+
+    pages, lm, dr = _inputs(spark)
+    ingest = str(tmp_path / "ingest")
+    ingest_bucketed(pages, ingest, n_buckets=B)
+    cfg = JobConfig(out_dir=str(tmp_path / "out"), n_buckets=B)
+    run_resumable_bucketed(spark, ingest, lm, dr, cfg, max_buckets=3)
+    run_resumable_bucketed(spark, ingest, lm, dr, cfg)
+    _assert_metrics_match_sinks(spark, cfg.out_dir)
+    res = replay_dead_letters(spark, pages, lm, dr.withColumn("action", F.lit("allow")), cfg)
+    assert res["recovered"] > 0
+    _assert_metrics_match_sinks(spark, cfg.out_dir)
+
+
+def test_replay_crash_mid_swap_rolls_forward(spark, tmp_path, monkeypatch):
+    """A replay dies between the two renames of its dead-letter swap, after
+    its 'replay' ledger row: the table is briefly absent, and the next call
+    finishes the swap instead of restoring the old table."""
+    from shovel_spark.pipeline import read_dead_letters, replay_dead_letters
+
+    pages, lm, dr = _inputs(spark)
+    allow_all = dr.withColumn("action", F.lit("allow"))
+    outs = {}
+    for tag in ("golden", "crashed"):
+        outs[tag] = JobConfig(out_dir=str(tmp_path / tag), n_buckets=B)
+        run_resumable(spark, pages, lm, dr, outs[tag])
+    replay_dead_letters(spark, pages, lm, allow_all, outs["golden"])
+
+    real_rename, calls = os.rename, []
+
+    def flaky(src, dst):
+        if src.endswith("__replay_tmp") and not calls:
+            calls.append(1)
+            raise OSError("crash between the swap's renames")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", flaky)
+    crashed = outs["crashed"].out_dir
+    with pytest.raises(OSError, match="crash between the swap's renames"):
+        replay_dead_letters(spark, pages, lm, allow_all, outs["crashed"])
+    assert not os.path.exists(os.path.join(crashed, "sink_dead_letter"))
+    assert run_resumable(spark, pages, lm, dr, outs["crashed"])["processed_buckets"] == []
+
+    assert not any("__replay" in d for d in os.listdir(crashed))
+    assert (read_dead_letters(spark, crashed).count()
+            == read_dead_letters(spark, outs["golden"].out_dir).count())
+    assert _sink_url_sets(spark, crashed) == _sink_url_sets(spark, outs["golden"].out_dir)
+    _assert_metrics_match_sinks(spark, crashed)
+
+
+def test_out_dir_refusals_write_nothing(spark, tmp_path):
+    """The resumable paths refuse, before writing anything, an out dir they
+    cannot manage with driver-side renames (a remote URI) and one whose
+    sinks hold the bucket-partitioned layout (run_once, earlier versions);
+    a file:// URI is a local path."""
+    from shovel_spark.pipeline import replay_dead_letters, run_once
+
+    pages, lm, dr = _inputs(spark)
+    with pytest.raises(ValueError, match="local-filesystem-only"):
+        run_resumable(spark, pages, lm, dr, JobConfig(out_dir="s3a://bucket/out", n_buckets=B))
+
+    legacy = JobConfig(out_dir=str(tmp_path / "legacy"), n_buckets=B)
+    run_once(spark, pages, lm, dr, legacy)
+    before = sorted(os.listdir(legacy.out_dir))
+    for call in (run_resumable, replay_dead_letters):
+        with pytest.raises(ValueError, match="bucket-partitioned output .* --fresh"):
+            call(spark, pages, lm, dr, legacy)
+    assert sorted(os.listdir(legacy.out_dir)) == before  # no ledger, no leaves
+
+    local = tmp_path / "local"
+    run_resumable(spark, pages, lm, dr, JobConfig(out_dir=f"file://{local}", n_buckets=B),
+                  max_buckets=1)
+    assert (local / "metrics_by_bucket").is_dir() and _unacked_leaves(spark, str(local)) == []
