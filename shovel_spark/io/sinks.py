@@ -24,11 +24,16 @@ from __future__ import annotations
 import contextlib
 import os
 import shutil
+import uuid
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
+
+from shovel_spark.session import arrow_table
 
 
 def _payload(payload_format: str, cols: list[str]) -> Column:
@@ -61,6 +66,20 @@ def local_path(path: str, what: str, hint: str = "") -> str:
     if "://" in path and not path.startswith("file://"):
         raise ValueError(f"{what} is local-filesystem-only (got {path!r}){hint}")
     return path.removeprefix("file://")
+
+
+def append_parquet(table_dir: str, rows, schema: T.StructType) -> None:
+    """Append ``rows`` to the parquet table at ``table_dir`` as one new
+    file, written from the driver: no Spark job, no Python worker. The
+    file is written under a hidden temp name (``.part-<uuid>.parquet.tmp``,
+    which readers skip) and renamed to ``part-<uuid>.parquet``, so a crash
+    leaves the append either whole or invisible."""
+    table_dir = local_path(table_dir, "append_parquet")
+    os.makedirs(table_dir, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp, path = os.path.join(table_dir, f".{name}.tmp"), os.path.join(table_dir, name)
+    pq.write_table(arrow_table(rows, schema), tmp)
+    os.rename(tmp, path)
 
 
 def _write_leaves(

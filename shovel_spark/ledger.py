@@ -28,7 +28,10 @@ ledger append, its buckets are *not* done and its leaves — staged or
 renamed — are uncommitted → the next call deletes them and re-runs the
 buckets under a new run id.
 If it dies after the ledger append, the buckets are done and skipped, and
-the leaves stay. A torn ledger append is one parquet file that either
+the leaves stay. A ledger append is one file written from the driver under
+a hidden temp name (``.part-<uuid>.parquet.tmp``, which readers skip) and
+then renamed to ``part-<uuid>.parquet`` (``io.sinks.append_parquet``): a
+crash mid-append leaves at most an ignored temp file, so the append either
 committed or did not. Either way: exactly-once output, with no overwrite of
 anything already committed.
 
@@ -50,12 +53,13 @@ from __future__ import annotations
 import os
 import shutil
 import uuid as _uuid
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from shovel_spark.io.sinks import append_parquet
 from shovel_spark.schema import LEDGER_SCHEMA
-from shovel_spark.session import local_rows_df
 
 
 def with_bucket(df: DataFrame, key: str = "url", n_buckets: int = 64) -> DataFrame:
@@ -106,6 +110,13 @@ def drop_unacked(tables: list[str], committed: set[str]) -> None:
             shutil.rmtree(os.path.join(table, leaf(run_id)))
 
 
+def _append(ledger_dir: str, rows: list[tuple]) -> None:
+    """Ledger rows (all columns but ``completed_at``) as one file written
+    from the driver, stamped with the driver's UTC clock."""
+    now = datetime.now(timezone.utc)
+    append_parquet(ledger_dir, [(*r, now) for r in rows], LEDGER_SCHEMA)
+
+
 def append_ledger(
     spark: SparkSession,
     ledger_dir: str,
@@ -115,8 +126,10 @@ def append_ledger(
     status: str = "done",
 ) -> None:
     """One 'done' row per completed bucket — the commit point (the ack).
-    A replay commits with ``status='replay'`` and one row of its counts."""
-    rows = [
+    A replay commits with ``status='replay'`` and one row of its counts.
+    ``spark`` is unused (the file is written from the driver); it keeps
+    the signature every ledger function shares."""
+    _append(ledger_dir, [
         (
             run_id,
             int(bc["bucket"]),
@@ -127,14 +140,9 @@ def append_ledger(
             int(bc["ignored"]),
             int(bc["rejected"]),
             lineage,
-            None,
         )
         for bc in bucket_counts
-    ]
-    df = local_rows_df(spark, rows, LEDGER_SCHEMA).withColumn(
-        "completed_at", F.current_timestamp()
-    )
-    df.write.mode("append").parquet(ledger_dir)
+    ])
 
 
 def append_attempts(
@@ -149,14 +157,10 @@ def append_attempts(
     Buckets that turn out to hold no rows accumulate attempt rows but never
     a done row; metrics_from_ledger ignores them (nacked is only reported
     for acked buckets, like a broker only counts redeliveries of real
-    messages)."""
+    messages). ``spark`` is unused, as in :func:`append_ledger`."""
     if not buckets:
         return
-    rows = [(run_id, int(b), "attempt", 0, 0, 0, 0, 0, None, None) for b in buckets]
-    df = local_rows_df(spark, rows, LEDGER_SCHEMA).withColumn(
-        "completed_at", F.current_timestamp()
-    )
-    df.write.mode("append").parquet(ledger_dir)
+    _append(ledger_dir, [(run_id, int(b), "attempt", 0, 0, 0, 0, 0, None) for b in buckets])
 
 
 def new_run_id() -> str:

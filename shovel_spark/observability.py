@@ -13,7 +13,10 @@ moving, which stage, how far along" — exactly what the reference's endpoint
 answers — and post-hoc it records how each stage's task curve progressed.
 
 Scale shape: samples are per-(tick, active stage) — bounded by run length /
-interval, never by data size. The write is one tiny driver-side parquet.
+interval, never by data size. Each monitored call appends one small
+``progress/part-<uuid>.parquet`` file, written from the driver with pyarrow
+and renamed into place (``io.sinks.append_parquet``, as the ledger appends
+are): recording the samples costs no Spark job.
 """
 
 from __future__ import annotations
@@ -23,13 +26,20 @@ import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
-from shovel_spark.session import local_rows_df
+from shovel_spark.io.sinks import append_parquet
 
-PROGRESS_SCHEMA = (
-    "ts_ms long, stage_id int, attempt int, name string, num_tasks int, "
-    "active_tasks int, complete_tasks int, failed_tasks int"
-)
+PROGRESS_SCHEMA = T.StructType([
+    T.StructField("ts_ms", T.LongType()),
+    T.StructField("stage_id", T.IntegerType()),
+    T.StructField("attempt", T.IntegerType()),
+    T.StructField("name", T.StringType()),
+    T.StructField("num_tasks", T.IntegerType()),
+    T.StructField("active_tasks", T.IntegerType()),
+    T.StructField("complete_tasks", T.IntegerType()),
+    T.StructField("failed_tasks", T.IntegerType()),
+])
 
 
 def _sample(status_tracker, now_ms: int) -> list[tuple]:
@@ -55,7 +65,8 @@ def _sample(status_tracker, now_ms: int) -> list[tuple]:
 
 class ProgressMonitor:
     """Context manager: poll stage progress while the body runs, write the
-    samples to ``{out_dir}/progress`` on exit.
+    samples to ``{out_dir}/progress`` on exit. ``out_dir`` is a local
+    path: the samples are written from the driver.
 
     >>> with ProgressMonitor(spark, cfg.out_dir):
     ...     run_resumable(...)
@@ -105,11 +116,7 @@ class ProgressMonitor:
         # append: successive runs against the same out_dir (crash + resume)
         # accumulate their progress history, like the run-history ledger
         try:
-            (
-                local_rows_df(self.spark, rows, PROGRESS_SCHEMA)
-                .write.mode("append")
-                .parquet(self.path)
-            )
+            append_parquet(self.path, rows, PROGRESS_SCHEMA)
         except Exception:  # noqa: BLE001
             # when the monitored body itself raised (dead context,
             # unwritable out_dir), a failing progress write must not MASK

@@ -12,6 +12,23 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from shovel_spark.session import local_rows_df
+
+
+def _lookup(mapping: DataFrame, *cols: Column) -> DataFrame:
+    """The broadcast side of a lookup: ``mapping`` projected to ``cols``
+    (key first), deduplicated on the driver — the first row per key wins,
+    and NULL keys are dropped, since an equi-join never matches them. A
+    mapping is config-sized, never data-sized, so collecting it is cheap,
+    and the rows go back as a local relation: no shuffle and no Python
+    worker build the broadcast."""
+    m = mapping.select(*cols)
+    first: dict = {}
+    for r in m.collect():
+        if r[0] is not None:
+            first.setdefault(r[0], r)
+    return F.broadcast(local_rows_df(mapping.sparkSession, list(first.values()), m.schema))
+
 
 def translate(
     df: DataFrame,
@@ -25,12 +42,10 @@ def translate(
     """Broadcast-join dictionary lookup with default fall-through.
 
     Mirrors ``util.translate``'s semantics: missing key -> ``default``
-    (reference: src/core/utils.js:74-76). The mapping side is always
-    broadcast — it is a config-sized dict, never data-sized.
+    (reference: src/core/utils.js:74-76). A key listed twice maps to its
+    first value, as a dict literal keeps one entry per key.
     """
-    lkp = F.broadcast(
-        mapping.select(F.col(map_key).alias("__k"), F.col(map_value).alias("__v")).dropDuplicates(["__k"])
-    )
+    lkp = _lookup(mapping, F.col(map_key).alias("__k"), F.col(map_value).alias("__v"))
     joined = df.join(lkp, df[key_col] == lkp["__k"], "left")
     if default is None:
         value = F.col("__v")
@@ -54,13 +69,13 @@ def apply_domain_rules(df: DataFrame, rules: DataFrame) -> DataFrame:
     """Attach ``rule_action`` / ``rule_sink`` from the domain allow/deny list.
 
     Deny ≙ shovel reject (reference: src/core/processor.js:140-144);
-    unlisted domain ≙ default-allow (null action coalesced downstream).
+    unlisted domain ≙ default-allow (null action coalesced downstream); a
+    domain listed twice keeps its first rule.
     """
-    lkp = F.broadcast(
-        rules.select(
-            F.col("domain").alias("__d"),
-            F.col("action").alias("rule_action"),
-            F.col("sink").alias("rule_sink"),
-        ).dropDuplicates(["__d"])
+    lkp = _lookup(
+        rules,
+        F.col("domain").alias("__d"),
+        F.col("action").alias("rule_action"),
+        F.col("sink").alias("rule_sink"),
     )
     return df.join(lkp, df["domain"] == lkp["__d"], "left").drop("__d")

@@ -30,17 +30,14 @@ import shutil
 import time
 from dataclasses import dataclass, field
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.storagelevel import StorageLevel
 
 from shovel_spark import ledger as L
 from shovel_spark.functions.parse import parse_pages
-from shovel_spark.io.sinks import STAGE_DIR, local_path, write_sinks
+from shovel_spark.io.sinks import STAGE_DIR, append_parquet, local_path, write_sinks
 from shovel_spark.operators.aggregate import sink_metrics
 from shovel_spark.operators.enrich import apply_domain_rules, normalize_lang
 from shovel_spark.operators.route import SinkRule, apply_routes, default_sink_rules
@@ -300,17 +297,13 @@ BUCKET_METRICS_SCHEMA = T.StructType([
 
 
 def _write_bucket_metrics(out_dir: str, run_id: str, rows) -> None:
-    """One small file, ``metrics_by_bucket/run=<run_id>/part-00000.parquet``,
-    written from the driver: its rows are already there, and a Spark write
-    of them would cost a job. Until the ledger commits the leaf, a torn
-    file sits in an uncommitted leaf that the next call deletes."""
-    leaf_dir = os.path.join(out_dir, "metrics_by_bucket", L.leaf(run_id))
-    os.makedirs(leaf_dir, exist_ok=True)
-    cols = {c: [r[c] for r in rows] for c in BUCKET_METRICS_SCHEMA.names}
-    pq.write_table(
-        pa.table(cols, schema=to_arrow_schema(BUCKET_METRICS_SCHEMA)),
-        os.path.join(leaf_dir, "part-00000.parquet"),
-    )
+    """One small file in ``metrics_by_bucket/run=<run_id>/``, written from
+    the driver: its rows (positional, in BUCKET_METRICS_SCHEMA order) are
+    already there, and a Spark write of them would cost a job. Until the
+    ledger commits the leaf, the next call deletes it with the rest of the
+    attempt."""
+    append_parquet(os.path.join(out_dir, "metrics_by_bucket", L.leaf(run_id)),
+                   rows, BUCKET_METRICS_SCHEMA)
 
 
 def sink_metrics_from_buckets(spark: SparkSession, out_dir: str, pipeline: str = "pages") -> DataFrame:
@@ -535,17 +528,27 @@ def replay_dead_letters(
         matched = pages.join(dl_urls, "url", "left_semi")
         # latest snapshot per url; ties broken by content hash (total
         # order). Checkpointed: it feeds the routed chain AND the
-        # unmatched anti-join below.
+        # dead-letter joins below.
         retry_pages = upsert_latest(
             matched.limit(0), matched, key="url", ts_col="warc_ts",
             tiebreak=F.xxhash64("html"),
         ).localCheckpoint(eager=False)
-        # NULL-url rows never match anything and stay dead (left_anti keeps
-        # null-key rows), as do urls missing from this pages snapshot.
-        # Anti-join against the RETRY urls (O(dead letters)) — a
-        # pages-wide distinct would re-scan the whole corpus.
-        unmatched = dl.join(retry_pages.select("url"), "url", "left_anti")
-        n_unmatched = unmatched.count()
+        # Joined against the RETRY urls (O(dead letters)) — a pages-wide
+        # distinct would re-scan the whole corpus. One pass counts, per
+        # bucket, the dl rows that LEAVE the table (every matched row: a
+        # url dead-lettered twice removes two rows though it retries once)
+        # and those that stay: NULL-url rows never match anything, nor do
+        # urls missing from this pages snapshot.
+        retry_urls = retry_pages.select("url", F.lit(True).alias("__matched"))
+        per_bucket = (
+            dl.join(retry_urls, "url", "left")
+            .groupBy("bucket", F.col("__matched").isNotNull().alias("matched"))
+            .agg(F.count("*").alias("n"))
+            .collect()
+        )
+        n_unmatched = sum(r["n"] for r in per_bucket if not r["matched"])
+        minus = [(r["bucket"], "dead_letter", "rejected", -r["n"]) for r in per_bucket if r["matched"]]
+        unmatched = dl.join(retry_urls, "url", "left_anti")
         routed = build_routed(retry_pages, lang_map, domain_rules, cfg).persist(
             StorageLevel.MEMORY_AND_DISK
         )
@@ -553,12 +556,6 @@ def replay_dead_letters(
             # ONE aggregation over the cached frame yields every counter
             # and the metrics delta's re-entering rows
             plus = routed.groupBy("bucket", "sink", "status").agg(F.count("*").alias("n")).collect()
-            # rows LEAVING the table = every matched dl row (a url that was
-            # dead-lettered twice removes two rows though it retries once)
-            minus = (
-                dl.join(retry_pages.select("url"), "url", "left_semi")
-                .groupBy("bucket").agg(F.count("*").alias("n")).collect()
-            )
             n_retried = sum(r["n"] for r in plus)
             n_still = sum(r["n"] for r in plus if r["status"] == "rejected")
             per_sink: dict = {}
@@ -573,10 +570,7 @@ def replay_dead_letters(
                     out_dir, sorted(per_sink), output_cols=SINK_COLS,
                     leaf=L.leaf(replay_id),
                 )
-            _write_bucket_metrics(out_dir, replay_id, [
-                {"bucket": r["bucket"], "sink": "dead_letter", "status": "rejected", "n": -r["n"]}
-                for r in minus
-            ] + plus)
+            _write_bucket_metrics(out_dir, replay_id, minus + plus)
             remainder = routed.filter(F.col("status") == "rejected").select(*SINK_COLS)
             remainder.unionByName(unmatched.select(*SINK_COLS)).write.mode("overwrite").parquet(
                 os.path.join(dl_path + "__replay_tmp", L.leaf(replay_id))

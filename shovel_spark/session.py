@@ -10,7 +10,10 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 DEFAULT_CONF: dict[str, str] = {
     # Runtime re-planning: coalesce small shuffle partitions, split skewed ones.
@@ -42,21 +45,33 @@ DEFAULT_CONF: dict[str, str] = {
 }
 
 
-def local_rows_df(spark: SparkSession, rows, schema):
-    """DataFrame from a small driver-local row list, single-sliced.
+def arrow_table(rows, schema: T.StructType) -> pa.Table:
+    """A ``pyarrow.Table`` of ``schema`` from positional rows (tuples or
+    ``Row``s). Its columns are nullable, as a Spark parquet write leaves
+    them; ``createDataFrame`` still rejects a null in a non-nullable
+    field."""
+    fields = pa.schema([f.with_nullable(True) for f in to_arrow_schema(schema)])
+    cols = list(zip(*rows)) or [()] * len(fields)
+    return pa.table([pa.array(c, type=f.type) for c, f in zip(cols, fields)], schema=fields)
 
-    ``spark.createDataFrame(rows, schema)`` slices local data into
-    ``spark.default.parallelism`` partitions — mostly EMPTY for the bounded
-    row lists this codebase materializes (ledger bucket rows, k-means
-    centroids, logreg weights, ntile offsets, sketch metadata). Every
-    single-task downstream consumer (a ``coalesce(1)`` parquet append, a
-    broadcast build) then pays one Python-worker round-trip PER SLICE
-    inside one task: measured 5-7 s for a 16-row ledger append on
-    local[32] versus 0.4 s single-sliced. All call sites here hold
-    driver-bounded lists, so one slice is always the right layout.
+
+def local_rows_df(spark: SparkSession, rows, schema):
+    """DataFrame from a small driver-local row list, planned as a
+    ``LocalRelation``.
+
+    The rows go to the JVM as one Arrow table, so the plan is a
+    ``LocalTableScan`` and no action on it starts a Python worker;
+    collecting it runs no Spark job. (A broadcast built from it still
+    runs one small job: ``BroadcastExchange`` gathers its child through
+    one.) A ``sc.parallelize`` RDD would cost a job and a worker round
+    trip per action, more than the rows' own work. The scan splits
+    the rows into ``min(rows, spark.default.parallelism)`` partitions; a
+    caller that writes the frame and wants one file coalesces it.
+    ``schema`` is a StructType or a DDL string.
     """
-    sc = spark.sparkContext
-    return spark.createDataFrame(sc.parallelize(rows, numSlices=1), schema)
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
 
 
 def get_spark(

@@ -95,6 +95,47 @@ def test_metrics_shape_and_totals(routed, oracle):
         assert per[sink]["acked"] == n
 
 
+def test_lookup_duplicate_and_null_keys(spark, oracle):
+    """A lookup keeps the first row of a key listed twice and never
+    matches a NULL key: routing over maps that carry both equals the
+    oracle over the clean maps, with no fact row multiplied."""
+    from shovel_spark.operators.enrich import apply_domain_rules, translate
+    from shovel_spark.session import local_rows_df
+
+    lm = default_lang_map(spark).collect() + [("en", "xx"), (None, "nul")]
+    dr = default_domain_rules(spark).collect() + [
+        ("news.example.com", "deny", None), (None, "deny", None),
+    ]
+    routed = build_routed(
+        synth_pages(spark, N, seed=SEED),
+        local_rows_df(spark, lm, "lang_raw string, lang_norm string"),
+        local_rows_df(spark, dr, "domain string, action string, sink string"),
+        JobConfig(n_buckets=16),
+    )
+    sinks = {
+        r["sink"]: r["count"]
+        for r in routed.filter(F.col("sink").isNotNull()).groupBy("sink").count().collect()
+    }
+    want = dict(oracle.sink_counts)
+    want["dead_letter"] = oracle.counts["rejected"]
+    assert sinks == {k: v for k, v in want.items() if v}
+    statuses = {r["status"]: r["count"] for r in routed.groupBy("status").count().collect()}
+    assert statuses == {s: oracle.counts[s] for s in ("acked", "ignored", "rejected") if oracle.counts[s]}
+    assert sum(statuses.values()) == N
+
+    df = local_rows_df(spark, [(1, "a"), (2, None), (3, "b")], "id int, k string")
+    mapping = local_rows_df(spark, [("a", "1"), ("a", "2"), (None, "n")], "k string, v string")
+    out = translate(df, "k", mapping, "k", "v", "v", default="d").orderBy("id").collect()
+    assert [(r.id, r.v) for r in out] == [(1, "1"), (2, "d"), (3, "d")]
+    rules = local_rows_df(
+        spark, [("x.com", "deny", None), ("x.com", "allow", "hot"), (None, "deny", None)],
+        "domain string, action string, sink string",
+    )
+    doms = local_rows_df(spark, [(1, "x.com"), (2, None)], "id int, domain string")
+    out = apply_domain_rules(doms, rules).orderBy("id").collect()
+    assert [(r.id, r.rule_action, r.rule_sink) for r in out] == [(1, "deny", None), (2, None, None)]
+
+
 def test_sink_payload_encoding(spark, routed, tmp_path):
     """Encoder-at-sink (reference: src/encoders/json.js): payload column
     round-trips through from_json."""

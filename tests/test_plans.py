@@ -4,6 +4,8 @@ change silently drops a broadcast or pushdown, these fail."""
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -30,6 +32,18 @@ def test_lookups_are_broadcast_joins(routed_plan):
     tree = routed_plan[: routed_plan.index("(1) ")]  # plan tree, before node details
     assert tree.count("BroadcastHashJoin") == 2  # lang map + domain rules
     assert "SortMergeJoin" not in routed_plan
+    # the lookups are deduplicated on the driver: no shuffle builds either
+    # broadcast side
+    lines = tree.splitlines()
+
+    def col(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    builds = [i for i, line in enumerate(lines) if "BroadcastExchange" in line]
+    assert len(builds) == 2
+    for i in builds:
+        below = itertools.takewhile(lambda line: col(line) > col(lines[i]), lines[i + 1:])
+        assert not [line for line in below if "Exchange" in line], tree
 
 
 def test_count_plan_prunes_text_and_warc_ts(routed_plan):

@@ -677,3 +677,109 @@ def test_out_dir_refusals_write_nothing(spark, tmp_path):
     run_resumable(spark, pages, lm, dr, JobConfig(out_dir=f"file://{local}", n_buckets=B),
                   max_buckets=1)
     assert (local / "metrics_by_bucket").is_dir() and _unacked_leaves(spark, str(local)) == []
+
+
+def test_torn_driver_append_is_ignored_by_every_reader(spark, tmp_path, monkeypatch):
+    """A crash inside a driver-side append, after its hidden temp file is
+    written but before the rename, leaves ``.part-<uuid>.parquet.tmp``.
+    Every reader skips such files — in the ledger, in ``progress`` and in
+    a metrics leaf — so the run reads as if the append never started, and
+    the resume redoes the buckets whose ``done`` append was torn."""
+    import glob
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from shovel_spark import ledger
+    from shovel_spark.observability import read_progress
+    from shovel_spark.pipeline import run_history, sink_metrics_from_buckets
+
+    pages, lm, dr = _inputs(spark)
+    golden = JobConfig(out_dir=str(tmp_path / "golden"), n_buckets=B)
+    run_resumable(spark, pages, lm, dr, golden)
+
+    cfg = JobConfig(out_dir=str(tmp_path / "torn"), n_buckets=B)
+    out = cfg.out_dir
+    run_resumable(spark, pages, lm, dr, cfg, max_buckets=3)
+    real_rename = os.rename
+
+    def torn(src, dst):
+        if (os.path.dirname(src) == os.path.join(out, "ledger") and src.endswith(".tmp")
+                and pq.read_table(src).column("status")[0].as_py() == "done"):
+            raise OSError("crash before the rename")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", torn)
+    with pytest.raises(OSError, match="crash before the rename"):
+        run_resumable(spark, pages, lm, dr, cfg)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert len(glob.glob(os.path.join(out, "ledger", ".part-*.parquet.tmp"))) == 1
+    done, _ = ledger.read_commits(spark, os.path.join(out, "ledger"))
+    assert len(done) == 3
+    assert len(run_resumable(spark, pages, lm, dr, cfg)["processed_buckets"]) == B - 3
+
+    # a readable copy of a real file under a temp name would change every
+    # total below if a reader took it in
+    for table in ("progress", os.path.join("metrics_by_bucket", "*")):
+        src = sorted(glob.glob(os.path.join(out, table, "part-*.parquet")))[0]
+        shutil.copy(src, os.path.join(os.path.dirname(src), "." + os.path.basename(src) + ".tmp"))
+
+    assert len(ledger.read_commits(spark, os.path.join(out, "ledger"))[0]) == B
+    m = metrics_from_ledger(spark, out).first()
+    gm = metrics_from_ledger(spark, golden.out_dir).first()
+    assert (m["in_rows"], m["acked"], m["ignored"], m["rejected"]) == (
+        gm["in_rows"], gm["acked"], gm["ignored"], gm["rejected"])
+    hist = run_history(spark, out).collect()
+    assert sorted((h["attempted"], h["completed"]) for h in hist) == [(B - 3, 0), (B - 3, B - 3), (B, 3)]
+    assert read_progress(spark, out).filter(F.col("stage_id") == -1).count() == 3
+    assert sink_metrics_from_buckets(spark, out).orderBy("sink").collect() == (
+        sink_metrics_from_buckets(spark, golden.out_dir).orderBy("sink").collect())
+    _assert_metrics_match_sinks(spark, out)
+
+
+def test_ledger_mixing_spark_and_driver_written_files(spark, tmp_path):
+    """A ledger that an earlier version appended with Spark writes (INT96
+    ``completed_at``) and this version appends from the driver reads as
+    one table, and the latest ``done`` row of a bucket wins whichever
+    writer wrote it."""
+    import time
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from shovel_spark import ledger
+    from shovel_spark.pipeline import run_history
+    from shovel_spark.schema import LEDGER_SCHEMA
+
+    led = str(tmp_path / "mixed" / "ledger")
+
+    def spark_append(run_id, status, bucket, n):
+        rows = [(run_id, bucket, status, n, n, 0, 0, 0, "old", None)]
+        (spark.createDataFrame(rows, LEDGER_SCHEMA)
+         .withColumn("completed_at", F.current_timestamp())
+         .write.mode("append").parquet(led))
+        time.sleep(0.01)
+
+    spark_append("rold", "attempt", 0, 0)
+    spark_append("rold", "attempt", 1, 0)
+    spark_append("rold", "done", 0, 10)
+    spark_append("rold", "done", 1, 10)
+    ledger.append_attempts(spark, led, "rnew", [1])
+    ledger.append_ledger(spark, led, "rnew", [
+        {"bucket": 1, "in_rows": 20, "acked": 20, "ignored": 0, "rejected": 0}], "new")
+    time.sleep(0.01)
+    spark_append("rlate", "done", 0, 30)
+
+    def ts_type(f):
+        meta = pq.ParquetFile(f).metadata
+        return meta.schema.column(meta.schema.names.index("completed_at")).physical_type
+
+    files = [os.path.join(led, f) for f in os.listdir(led) if f.endswith(".parquet")]
+    assert sorted({ts_type(f) for f in files}) == ["INT64", "INT96"]
+    assert spark.read.parquet(led).schema["completed_at"].dataType == T.TimestampType()
+    assert ledger.read_commits(spark, led) == ({0, 1}, {"rold", "rnew", "rlate"})
+    m = metrics_from_ledger(spark, str(tmp_path / "mixed")).first()
+    assert (m["in_rows"], m["acked"], m["nacked"]) == (50, 50, 1)
+    hist = {h["run_id"]: h for h in run_history(spark, str(tmp_path / "mixed")).collect()}
+    assert {k: (h["attempted"], h["completed"], h["in_rows"]) for k, h in hist.items()} == {
+        "rold": (2, 2, 20), "rnew": (1, 1, 20), "rlate": (0, 1, 30)}
