@@ -1,37 +1,41 @@
-"""Multi-sink fan-out writer — the outputs-slot analog (SURVEY.md §2.6).
+"""Multi-sink writer — the outputs-slot analog (SURVEY.md §2.6).
 
 Shovel's ``pipeline`` output routes each message to one or many downstream
 pipelines (reference: src/outputs/pipeline.js:18-30, fanout/broadcast modes);
 its elasticsearch output renders a dynamic per-message index name
 (reference: src/outputs/elasticsearch.js:203-210). The Spark-native shape:
 
-  - persist the routed frame ONCE, then one filtered write per sink — N sinks
-    cost one source scan + N cheap filtered passes over cached batches, not
-    N scans of a 100 TB table;
-  - dynamic index name ≙ partitioned table writes (partition columns carry
-    what the name template carried: date, bucket);
+  - every sink in ONE write job: the routed frame is read once, its rows go
+    out partitioned by their sink into a stage directory, and each sink's
+    part is then moved into ``sink_<name>/`` — one job whatever the number
+    of sinks (:func:`write_sinks`);
+  - fanout mode ≙ one ``sink`` per row; broadcast mode ≙ ``explode`` the
+    row's ``sinks`` array (apply_routes_broadcast) into ``sink`` first;
+  - dynamic index name ≙ partition columns (they carry what the name
+    template carried: date, bucket);
   - per-doc error isolation ≙ the dead_letter sink receiving rejected rows;
-  - a resumable attempt writes every sink in one job into its own
-    ``run=<run_id>`` leaf per sink (``write_sinks(..., leaf=...)``).
+  - a resumable attempt writes into its own ``run=<run_id>`` leaf per sink
+    (``write_sinks(..., leaf=...)``).
 
-Format is parquet by default; ``format='iceberg'`` plugs in transparently
-when an Iceberg catalog is configured (the sandbox has no Iceberg runtime
-jar — the write path is identical apart from ``writeTo``).
+The moves are renames from the driver, so the sink writer is
+local-filesystem-only (:func:`local_path`): a remote URI raises before
+anything is written. ``fmt`` names a file-based Spark data source (parquet
+by default); a catalog table format such as Iceberg commits through its
+catalog (io/catalog.py), not through this writer.
 """
 
 from __future__ import annotations
 
 import contextlib
+import glob
 import os
 import shutil
 import uuid
-from collections.abc import Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.storagelevel import StorageLevel
 
 from shovel_spark.session import arrow_table
 
@@ -52,7 +56,7 @@ def _payload(payload_format: str, cols: list[str]) -> Column:
     raise ValueError(f"unknown payload_format: {payload_format!r}")
 
 
-#: where a per-attempt write lands before its renames (see _write_leaves)
+#: where a sink write lands before it is moved into place (see write_sinks)
 STAGE_DIR = "_sink_stage"
 _IX = "__sink_ix"
 
@@ -80,117 +84,6 @@ def append_parquet(table_dir: str, rows, schema: T.StructType) -> None:
     tmp, path = os.path.join(table_dir, f".{name}.tmp"), os.path.join(table_dir, name)
     pq.write_table(arrow_table(rows, schema), tmp)
     os.rename(tmp, path)
-
-
-def _write_leaves(
-    routed: DataFrame,
-    out_dir: str,
-    sinks: list[str],
-    leaf: str,
-    output_cols: list[str] | None,
-    fmt: str,
-    payload_format: str | None,
-) -> dict[str, str]:
-    """Every sink in ONE write job: rows go out partitioned by their sink's
-    position in ``sinks`` into ``{out_dir}/_sink_stage/{leaf}/``, then each
-    sink's directory is renamed to ``{out_dir}/sink_{name}/{leaf}``. The
-    frame is read once, not once per sink, and each write task leaves one
-    file per sink it holds rows for. A sink with no rows gets an empty
-    leaf, as a fan-out write would leave it. The renames make this
-    local-filesystem-only, like the ledger's leaf cleanup."""
-    out_dir = local_path(out_dir, "write_sinks(leaf=...)")
-    cols = list(output_cols) if output_cols else routed.columns
-    ix = F.array_position(F.array(*[F.lit(s) for s in sinks]), F.col("sink"))
-    part = routed.select(*cols, ix.alias(_IX)).filter(F.col(_IX) > 0)
-    if payload_format is not None:
-        part = part.withColumn("payload", _payload(payload_format, cols))
-    stage = os.path.join(out_dir, STAGE_DIR, leaf)
-    # the stage holds this attempt only: pin STATIC overwrite
-    part.write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy(
-        _IX
-    ).format(fmt).save(stage)
-    paths: dict[str, str] = {}
-    for i, name in enumerate(sinks, 1):
-        path = paths[name] = os.path.join(out_dir, f"sink_{name}", leaf)
-        src = os.path.join(stage, f"{_IX}={i}")
-        if os.path.isdir(src):
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            os.rename(src, path)
-        else:
-            part.limit(0).drop(_IX).write.mode("overwrite").format(fmt).save(path)
-    shutil.rmtree(stage)
-    with contextlib.suppress(OSError):
-        os.rmdir(os.path.dirname(stage))
-    return paths
-
-
-def _fanout_write(
-    routed: DataFrame,
-    out_dir: str,
-    sinks: list[str],
-    sink_filter: Callable[[str], Column],
-    partition_cols: list[str] | None,
-    mode: str,
-    output_cols: list[str] | None,
-    fmt: str,
-    payload_format: str | None,
-    drop_cols: tuple[str, ...] = (),
-    max_workers: int | None = None,
-) -> dict[str, str]:
-    """Shared persist-once machinery behind both dispatch modes: cache the
-    routed frame, run one filtered write job per sink concurrently (disjoint
-    paths — Spark's scheduler interleaves jobs from separate threads)."""
-    if not sinks:
-        return {}
-    caller_persisted = routed.storageLevel != StorageLevel.NONE
-    if partition_cols and not caller_persisted:
-        # align data partitions with the write's directory partitions BEFORE
-        # caching: without this, every (task × partition-dir × sink) triple
-        # emits its own tiny file — measured 16× slower end-to-end at 2M rows
-        # (~27k files); one shuffle here serves every sink's write
-        routed = routed.repartition(*partition_cols)
-    if not caller_persisted:
-        routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
-    paths: dict[str, str] = {}
-
-    def _write_one(name: str) -> tuple[str, str]:
-        path = os.path.join(out_dir, f"sink_{name}")
-        part = routed.filter(sink_filter(name))
-        keep = list(output_cols) if output_cols else [
-            c for c in part.columns if c not in drop_cols
-        ]
-        for c in partition_cols or []:
-            if c not in keep:
-                keep.append(c)
-        part = part.select(*[c for c in keep if c not in drop_cols])
-        if payload_format is not None:
-            part = part.withColumn("payload", _payload(payload_format, part.columns))
-        writer = part.write.mode(mode)
-        if partition_cols:
-            if mode == "overwrite":
-                # pinned per-write: a partitioned overwrite replaces only
-                # the partitions it writes; Spark's default (static) would
-                # delete every other partition of the sink
-                writer = writer.option("partitionOverwriteMode", "dynamic")
-            writer = writer.partitionBy(*partition_cols)
-        writer.format(fmt).save(path)
-        return name, path
-
-    try:
-        from concurrent.futures import ThreadPoolExecutor
-
-        # concurrent write jobs against one cached frame: each job is a cheap
-        # filtered pass over in-memory batches, so a few in flight keeps the
-        # scheduler busy without N sinks' worth of simultaneous output
-        # committers; callers with many small sinks raise max_workers
-        workers = max_workers if max_workers is not None else min(4, len(sinks))
-        with ThreadPoolExecutor(max_workers=max(1, min(workers, len(sinks)))) as pool:
-            for name, path in pool.map(_write_one, sinks):
-                paths[name] = path
-    finally:
-        if not caller_persisted:
-            routed.unpersist()
-    return paths
 
 
 def compact_parquet(
@@ -228,8 +121,6 @@ def compact_parquet(
 
     Returns {"files_before", "files_after", "bytes"}.
     """
-    import glob
-
     path = local_path(
         path, "compact_parquet",
         "; on HDFS/object stores use the table format's compaction (Iceberg rewrite_data_files)",
@@ -284,66 +175,94 @@ def write_sinks(
     output_cols: list[str] | None = None,
     fmt: str = "parquet",
     payload_format: str | None = None,
-    max_workers: int | None = None,
     leaf: str | None = None,
 ) -> dict[str, str]:
-    """Write each sink's rows to ``{out_dir}/sink_{name}``; returns paths.
+    """Write each sink's rows to ``{out_dir}/sink_{name}`` in ONE write
+    job; returns the paths.
 
-    Fanout mode: each row carries exactly one ``sink`` (apply_routes'
-    first-match dispatch) and is written once.
+    Each row carries at most one ``sink`` (apply_routes' first-match
+    dispatch); rows of no sink, or of one not in ``sinks``, go nowhere. For
+    broadcast mode, explode the row's ``sinks`` array into ``sink`` first.
 
-    ``partition_cols`` (e.g. ``['bucket']`` or ``['dt']``) makes the write
-    dynamic-partition-overwrite-able: an overwrite replaces only the
-    partitions it writes.
+    The job writes ``{out_dir}/_sink_stage/``, partitioned by the sink's
+    position in ``sinks`` and then by ``partition_cols`` (e.g.
+    ``['bucket']`` or ``['dt']``); each sink's part is then moved into
+    place from the driver:
 
-    ``leaf`` (e.g. ``'run=<run_id>'``) writes each sink into its own
-    subdirectory ``{out_dir}/sink_{name}/{leaf}`` — the resumable runner's
-    per-attempt layout, one directory per attempt whatever its buckets —
-    in one write job for all sinks (:func:`_write_leaves`). It refuses
-    ``partition_cols``; ``mode`` and ``max_workers`` do not apply.
+    - ``mode='overwrite'`` replaces each partition the job wrote and keeps
+      the others (dynamic partition overwrite); without ``partition_cols``
+      it replaces the whole sink;
+    - ``mode='append'`` adds the job's files to those already there.
+
+    A sink without rows keeps what it holds; without ``partition_cols``, an
+    overwrite (or a first write) gives it an empty table that still reads,
+    at the cost of one more job.
+
+    ``leaf`` (e.g. ``'run=<run_id>'``) writes each sink into
+    ``{out_dir}/sink_{name}/{leaf}`` — the resumable runner's per-attempt
+    layout, staged under ``_sink_stage/{leaf}``; it refuses
+    ``partition_cols``.
 
     ``payload_format='json'|'msgpack'|'json5'`` adds a serialized
     ``payload`` column — the encoder-slot-at-the-sink analog (reference:
     src/encoders/*.js; shovel encodes content right before the output
-    delivers it). Typed sinks (parquet/iceberg) don't need it;
-    wire-protocol sinks do.
+    delivers it). Typed sinks (parquet) don't need it; wire-protocol sinks
+    do.
 
-    A caller-managed cache is respected: persisting is idempotent but an
-    unconditional unpersist here would evict the caller's copy too.
+    The frame is read once and not persisted here. Each write task leaves
+    one file per sink and partition it holds rows for: a caller that wants
+    one file per partition repartitions by ``partition_cols`` first.
     """
-    if leaf is not None:
-        if partition_cols:
-            raise ValueError("leaf and partition_cols exclude each other")
-        return _write_leaves(routed, out_dir, sinks, leaf, output_cols, fmt, payload_format)
-    return _fanout_write(
-        routed, out_dir, sinks, lambda name: F.col("sink") == name,
-        partition_cols, mode, output_cols, fmt, payload_format,
-        max_workers=max_workers,
-    )
+    if leaf is not None and partition_cols:
+        raise ValueError("leaf and partition_cols exclude each other")
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
+    if not sinks:
+        return {}
+    out_dir = local_path(out_dir, "write_sinks")
+    parts = list(partition_cols or [])
+    cols = list(output_cols) if output_cols else routed.columns
+    cols += [c for c in parts if c not in cols]
+    ix = F.array_position(F.array(*[F.lit(s) for s in sinks]), F.col("sink"))
+    part = routed.select(*cols, ix.alias(_IX)).filter(F.col(_IX) > 0)
+    if payload_format is not None:
+        part = part.withColumn("payload", _payload(payload_format, cols))
+    stage = os.path.join(out_dir, STAGE_DIR, leaf or uuid.uuid4().hex)
+    # the stage holds this write only: pin STATIC overwrite
+    part.write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy(
+        _IX, *parts
+    ).format(fmt).save(stage)
+    paths: dict[str, str] = {}
+    for i, name in enumerate(sinks, 1):
+        path = os.path.join(out_dir, f"sink_{name}")
+        path = paths[name] = os.path.join(path, leaf) if leaf else path
+        src = os.path.join(stage, f"{_IX}={i}")
+        if os.path.isdir(src):
+            _move_partitions(src, path, len(parts), mode)
+        elif parts:
+            os.makedirs(path, exist_ok=True)
+        elif mode == "overwrite" or not os.path.exists(path):
+            part.limit(0).drop(_IX).write.mode("overwrite").format(fmt).save(path)
+    shutil.rmtree(stage)
+    with contextlib.suppress(OSError):
+        os.rmdir(os.path.dirname(stage))
+    return paths
 
 
-def write_sinks_broadcast(
-    routed: DataFrame,
-    out_dir: str,
-    sinks: list[str],
-    partition_cols: list[str] | None = None,
-    mode: str = "overwrite",
-    output_cols: list[str] | None = None,
-    fmt: str = "parquet",
-    payload_format: str | None = None,
-    sinks_col: str = "sinks",
-    max_workers: int | None = None,
-) -> dict[str, str]:
-    """Broadcast-mode fan-out writer: the row's ``sinks: array<string>``
-    (apply_routes_broadcast) names EVERY sink that receives it — a row
-    matching k sinks is written k times, once per sink directory. Same
-    persist-once contract, format and encoder options as write_sinks."""
-    return _fanout_write(
-        routed, out_dir, sinks,
-        lambda name: F.array_contains(F.col(sinks_col), name),
-        partition_cols, mode, output_cols, fmt, payload_format,
-        drop_cols=(sinks_col,), max_workers=max_workers,
-    )
+def _move_partitions(src: str, dst: str, depth: int, mode: str) -> None:
+    """Move the partition directories ``depth`` levels below ``src`` (``src``
+    itself at depth 0) to the same place below ``dst``: in place of the
+    directory there (overwrite), or file by file into it (append)."""
+    for s in glob.glob(os.path.join(glob.escape(src), *["*"] * depth)):
+        d = os.path.normpath(os.path.join(dst, os.path.relpath(s, src)))
+        if mode == "append":
+            os.makedirs(d, exist_ok=True)
+            for f in os.listdir(s):
+                os.rename(os.path.join(s, f), os.path.join(d, f))
+        else:
+            shutil.rmtree(d, ignore_errors=True)
+            os.makedirs(os.path.dirname(d), exist_ok=True)
+            os.rename(s, d)
 
 
 def write_jsonl_shards(

@@ -4,21 +4,24 @@ Shovel wires six node slots from YAML at startup (reference:
 src/core/processor.js:65-84); here the same declarative config compiles to
 
     read pages → parse (uuid, domain, text) → broadcast enrich (lang map,
-    domain rules) → route (status, sink) → bucket → fan-out writes + metrics
+    domain rules) → route (status, sink) → bucket → one sink write + metrics
 
 which Catalyst fuses into scan + one codegen stage + two broadcast joins —
 predicate pushdown, column pruning (the count-only paths never read ``html``)
 and join planning are free (SURVEY.md §4).
 
-Resume protocol (``run_resumable``, ``run_resumable_bucketed``,
-``replay_dead_letters``; details in ledger.py): each call reads the ledger
-once and deletes the leaves of attempts that never committed, skips done
-buckets, writes the rest into per-attempt leaves —
-``sink_<name>/run=<run_id>/`` (``bucket`` a data column; every sink in one
-write job) and one small ``metrics_by_bucket/run=<run_id>/`` file — and
-commits them with one ledger append. Nothing is overwritten, so no call depends on the session's
-partition-overwrite mode. ``run_once`` keeps the ``bucket``-partitioned
-layout.
+Resume protocol (``run_resumable``, ``replay_dead_letters``; details in
+ledger.py): each call reads the ledger once and deletes the leaves of
+attempts that never committed, skips done buckets, writes the rest into
+per-attempt leaves — ``sink_<name>/run=<run_id>/`` (``bucket`` a data
+column; every sink in one write job) and one small
+``metrics_by_bucket/run=<run_id>/`` file — and commits them with one ledger
+append. Nothing is overwritten, so no call depends on the session's
+partition-overwrite mode. The skip is a filter on ``bucket``: on the
+computed hash, which Catalyst places directly above the scan, or — when
+``pages`` carries its own ``bucket``, as a bucketed ingest does — on that
+column, which prunes done buckets' partitions at the scan. ``run_once``
+keeps the ``bucket``-partitioned layout.
 """
 
 from __future__ import annotations
@@ -90,7 +93,9 @@ def build_routed(
     domain_rules: DataFrame,
     cfg: JobConfig,
 ) -> DataFrame:
-    """The full lazy chain, no action triggered."""
+    """The full lazy chain, no action triggered. A ``bucket`` column of
+    ``pages`` is carried through as the rows' bucket; without one, the
+    bucket is computed from the url (``ledger.with_bucket``)."""
     df = parse_pages(pages, impl=cfg.parser_impl)
     df = normalize_lang(df, lang_map, default=cfg.lang_default)
     df = apply_domain_rules(df, domain_rules)
@@ -107,6 +112,8 @@ def build_routed(
             F.when(F.col("rule_action") == "deny", F.concat(F.lit("domain_rule:deny:"), F.col("domain"))),
         ),
     )
+    if "bucket" in pages.columns:
+        return df.select(*OUTPUT_COLS, "lang", F.col("bucket").cast("int"))
     return L.with_bucket(df.select(*OUTPUT_COLS, "lang"), n_buckets=cfg.n_buckets)
 
 
@@ -120,8 +127,9 @@ def run_once(
     """Single-shot run (no ledger): write all sinks, return metrics DF."""
     routed = build_routed(pages, lang_map, domain_rules, cfg)
     # one persist shared by ALL consumers (sinks + metrics + dimension
-    # counts) — otherwise each output re-runs the full parse chain
-    routed = routed.persist()
+    # counts) — otherwise each output re-runs the full parse chain. Whole
+    # buckets per task: the sink write leaves one file per (sink, bucket)
+    routed = routed.repartition("bucket").persist()
     try:
         write_sinks(routed, cfg.out_dir, cfg.sinks, partition_cols=["bucket"], output_cols=OUTPUT_COLS)
         metrics = sink_metrics(routed, pipeline=cfg.name)
@@ -176,24 +184,81 @@ def run_resumable(
     One call at a time per ``cfg.out_dir``, runs and replays alike: a call
     deletes the leaves of every attempt that has not committed, a running
     one's included (ledger.py).
+
+    ``pages`` may carry its own ``bucket`` column — a bucketed ingest
+    (:func:`ingest_bucketed`) read back with ``spark.read.parquet``. Each
+    row's bucket is then taken from it (:func:`build_routed`), and the
+    pending filter on it prunes done buckets' partitions at the scan. A row
+    whose bucket is outside ``range(cfg.n_buckets)`` (an ingest made with
+    another bucket count) fails the call with a ValueError before its
+    ledger append: nothing is committed.
     Returns {run_id, processed_buckets, skipped_buckets}.
     """
+    from shovel_spark.observability import ProgressMonitor
 
-    def pending(done: set[int], taken: list[int] | None) -> DataFrame:
-        return _select_buckets(build_routed(pages, lang_map, domain_rules, cfg), done, taken)
+    run_id = run_id or L.new_run_id()
+    run_leaf = L.leaf(run_id)  # rejects an id a reader cannot list safely
+    out_dir, done = _open_out_dir(spark, cfg.out_dir)
+    ledger_dir = os.path.join(out_dir, "ledger")
 
-    return _run_buckets(
-        spark, cfg, pending, run_id, max_buckets, throttle,
-        lineage or f"pages->{cfg.out_dir}", monitor,
-    )
+    # the delivery record: every bucket this run intends to process gets an
+    # 'attempt' row BEFORE any work — attempts without a 'done' ack make
+    # the resume's re-attempt count as nacked = attempts - 1 in
+    # metrics_from_ledger (broker-redelivery semantics)
+    candidates = sorted(set(range(cfg.n_buckets)) - done)
+    taken = candidates[:max_buckets] if max_buckets is not None else candidates
+    L.append_attempts(spark, ledger_dir, run_id, taken if throttle else candidates)
+    result = {"run_id": run_id, "processed_buckets": taken, "skipped_buckets": sorted(done)}
+    t0 = time.time()
+    if not taken:
+        return {**result, "elapsed_sec": 0.0}
 
+    bucket = F.col("bucket")
+    if "bucket" in pages.columns:
+        # on the source column, the filter prunes at the scan. It skips
+        # only this run's other buckets, so a row of a bucket outside
+        # range(n_buckets) is read and refused below, before the commit
+        skip = sorted(set(range(cfg.n_buckets)) - set(taken))
+        if skip:
+            pages = pages.filter(bucket.isNull() | ~bucket.isin(skip))
+        pending = build_routed(pages, lang_map, domain_rules, cfg)
+    else:
+        pending = build_routed(pages, lang_map, domain_rules, cfg)
+        if max_buckets is not None:
+            pending = pending.filter(bucket.isin(taken))
+        elif done:
+            pending = pending.filter(~bucket.isin(sorted(done)))
 
-def _select_buckets(df: DataFrame, done: set[int], taken: list[int] | None) -> DataFrame:
-    """Rows of the buckets to process: ``taken`` when the call takes only
-    some of them, else every bucket not done."""
-    if taken is not None:
-        return df.filter(F.col("bucket").isin(taken))
-    return df.filter(~F.col("bucket").isin(sorted(done))) if done else df
+    # one write job fills the cache and writes every sink's run=<run_id>
+    # leaf; one groupBy collect over the cache yields both the
+    # metrics_by_bucket leaf and the ledger's per-bucket counts
+    pending = pending.persist(StorageLevel.MEMORY_AND_DISK)
+    mon = ProgressMonitor(spark, out_dir) if monitor else contextlib.nullcontext()
+    try:
+        with mon:
+            write_sinks(pending, out_dir, cfg.sinks, output_cols=SINK_COLS, leaf=run_leaf)
+            metrics = pending.groupBy("bucket", "sink", "status").agg(F.count("*").alias("n")).collect()
+            _write_bucket_metrics(out_dir, run_id, metrics)
+    finally:
+        pending.unpersist()
+    # a processed bucket that held ZERO rows still completed — ack it with
+    # zero counts, or it stays pending forever (a throttled caller would
+    # re-select it every invocation and never progress past it)
+    counts = {b: {"bucket": b, "in_rows": 0, "acked": 0, "ignored": 0, "rejected": 0} for b in taken}
+    for r in metrics:
+        c = counts.get(r["bucket"])
+        if c is None:
+            raise ValueError(
+                f"pages carries rows of bucket {r['bucket']}, outside this run's "
+                f"range({cfg.n_buckets}): a source bucket column must come from "
+                f"ingest_bucketed(..., n_buckets={cfg.n_buckets}); nothing was committed"
+            )
+        c["in_rows"] += r["n"]
+        if r["status"] in c:
+            c[r["status"]] += r["n"]
+    # the commit point
+    L.append_ledger(spark, ledger_dir, run_id, list(counts.values()), lineage or f"pages->{cfg.out_dir}")
+    return {**result, "elapsed_sec": time.time() - t0}
 
 
 def _open_out_dir(spark: SparkSession, out_dir: str) -> tuple[str, set[int]]:
@@ -224,66 +289,6 @@ def _open_out_dir(spark: SparkSession, out_dir: str) -> tuple[str, set[int]]:
     _settle_dead_letter_swap(os.path.join(out_dir, "sink_dead_letter"), committed)
     L.drop_unacked(tables + [os.path.join(out_dir, STAGE_DIR)], committed)
     return out_dir, done
-
-
-def _run_buckets(
-    spark: SparkSession,
-    cfg: JobConfig,
-    pending_for,
-    run_id: str | None,
-    max_buckets: int | None,
-    throttle: bool,
-    lineage: str,
-    monitor: bool,
-) -> dict:
-    """The resumable run shared by both entry points. ``pending_for(done,
-    taken)`` builds the routed rows of the buckets to process.
-
-    One write job fills the persisted frame and writes every sink's
-    ``run=<run_id>`` leaf; one ``groupBy(bucket, sink, status)`` collect
-    over the cache yields both the ``metrics_by_bucket`` leaf and the
-    ledger's per-bucket counts. The ledger append that follows is the
-    commit point."""
-    from shovel_spark.observability import ProgressMonitor
-
-    run_id = run_id or L.new_run_id()
-    run_leaf = L.leaf(run_id)  # rejects an id a reader cannot list safely
-    out_dir, done = _open_out_dir(spark, cfg.out_dir)
-    ledger_dir = os.path.join(out_dir, "ledger")
-
-    # the delivery record: every bucket this run intends to process gets an
-    # 'attempt' row BEFORE any work — attempts without a 'done' ack make
-    # the resume's re-attempt count as nacked = attempts - 1 in
-    # metrics_from_ledger (broker-redelivery semantics)
-    candidates = sorted(set(range(cfg.n_buckets)) - done)
-    taken = candidates[:max_buckets] if max_buckets is not None else candidates
-    L.append_attempts(spark, ledger_dir, run_id, taken if throttle else candidates)
-    result = {"run_id": run_id, "processed_buckets": taken, "skipped_buckets": sorted(done)}
-    t0 = time.time()
-    if not taken:
-        return {**result, "elapsed_sec": 0.0}
-
-    pending = pending_for(done, taken if max_buckets is not None else None)
-    pending = pending.persist(StorageLevel.MEMORY_AND_DISK)
-    mon = ProgressMonitor(spark, out_dir) if monitor else contextlib.nullcontext()
-    try:
-        with mon:
-            write_sinks(pending, out_dir, cfg.sinks, output_cols=SINK_COLS, leaf=run_leaf)
-            metrics = pending.groupBy("bucket", "sink", "status").agg(F.count("*").alias("n")).collect()
-            _write_bucket_metrics(out_dir, run_id, metrics)
-    finally:
-        pending.unpersist()
-    # a processed bucket that held ZERO rows still completed — ack it with
-    # zero counts, or it stays pending forever (a throttled caller would
-    # re-select it every invocation and never progress past it)
-    counts = {b: {"bucket": b, "in_rows": 0, "acked": 0, "ignored": 0, "rejected": 0} for b in taken}
-    for r in metrics:
-        c = counts[r["bucket"]]
-        c["in_rows"] += r["n"]
-        if r["status"] in c:
-            c[r["status"]] += r["n"]
-    L.append_ledger(spark, ledger_dir, run_id, list(counts.values()), lineage)
-    return {**result, "elapsed_sec": time.time() - t0}
 
 
 #: ``metrics_by_bucket`` rows: the row count of each (bucket, sink, status)
@@ -334,48 +339,16 @@ def sink_metrics_from_buckets(spark: SparkSession, out_dir: str, pipeline: str =
 
 def ingest_bucketed(pages: DataFrame, path: str, n_buckets: int = 64, key: str = "url") -> None:
     """Materialize the input partitioned by its stable bucket — the scan-level
-    resume optimization: a resumed run over a bucketed ingest PRUNES done
-    buckets at the parquet scan (PartitionFilters), so skipped work costs
-    zero I/O instead of read-then-filter. At 10^12 rows that's the
-    difference between re-scanning 100 TB and scanning only the pending
-    fraction."""
+    resume optimization: ``run_resumable`` over ``spark.read.parquet(path)``
+    (with the same ``n_buckets``) PRUNES done buckets at the parquet scan
+    (PartitionFilters), so skipped work costs zero I/O instead of
+    read-then-filter. At 10^12 rows that's the difference between
+    re-scanning 100 TB and scanning only the pending fraction."""
     # full rebuild: pin STATIC overwrite (a re-ingest over fewer rows must
     # not leave stale bucket partitions under a globally-dynamic session)
     L.with_bucket(pages, key=key, n_buckets=n_buckets).write.mode("overwrite").option(
         "partitionOverwriteMode", "static"
     ).partitionBy("bucket").parquet(path)
-
-
-def read_bucketed(spark: SparkSession, path: str) -> DataFrame:
-    """Read a bucketed ingest; the partition column 'bucket' comes back as a
-    real column, and build_routed/with_bucket will reuse it (with_bucket
-    recomputes the identical value — same hash, same key — so plans that
-    filter on bucket before the recompute still prune)."""
-    return spark.read.parquet(path)
-
-
-def run_resumable_bucketed(
-    spark: SparkSession,
-    ingest_path: str,
-    lang_map: DataFrame,
-    domain_rules: DataFrame,
-    cfg: JobConfig,
-    run_id: str | None = None,
-    max_buckets: int | None = None,
-    throttle: bool = False,
-) -> dict:
-    """run_resumable over a bucketed ingest: done buckets are eliminated by
-    partition pruning at the scan (assert: PartitionFilters in the plan),
-    not by a post-read filter. ``max_buckets``/``throttle`` as in
-    :func:`run_resumable`; the write, metrics and commit are shared."""
-
-    def pending(done: set[int], taken: list[int] | None) -> DataFrame:
-        pages = _select_buckets(read_bucketed(spark, ingest_path), done, taken)  # prunes partitions
-        return build_routed(pages.drop("bucket"), lang_map, domain_rules, cfg)
-
-    return _run_buckets(
-        spark, cfg, pending, run_id, max_buckets, throttle, f"bucketed:{ingest_path}", True
-    )
 
 
 def metrics_from_ledger(spark: SparkSession, out_dir: str, pipeline: str = "pages") -> DataFrame:
@@ -492,7 +465,7 @@ def replay_dead_letters(
     Merge semantics, committed as one attempt (see ledger.py):
 
     - newly-successful rows append to their sinks as a new leaf
-      ``sink_<name>/run=<replay_id>/`` through the shared fan-out writer;
+      ``sink_<name>/run=<replay_id>/`` through the sink writer;
       rows that now route to IGNORED leave the set without joining a sink;
     - ``metrics_by_bucket`` gains one leaf of signed deltas: every matched
       dead-letter ROW leaves (dead_letter, rejected) and each retried URL

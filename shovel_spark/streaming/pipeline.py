@@ -55,8 +55,9 @@ def run_stream_once(
     routed = build_routed(stream, lang_map, domain_rules, cfg)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # whole buckets per write task: one file per (sink, bucket) a batch
         write_sinks(
-            batch_df,
+            batch_df.repartition("bucket"),
             cfg.out_dir,
             cfg.sinks,
             partition_cols=["bucket"],

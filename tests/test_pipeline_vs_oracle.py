@@ -171,10 +171,9 @@ def test_sink_payload_encoding_msgpack(spark, routed, tmp_path):
     assert decoded["status"] == "acked"
 
 
-def test_write_sinks_wide_fanout_max_workers(spark, tmp_path):
-    """12-sink fan-out with the concurrency knob raised past the default 4:
-    every sink directory lands with exactly its own rows (persist-once, no
-    cross-sink leakage under concurrent write jobs)."""
+def test_write_sinks_wide_fanout(spark, tmp_path):
+    """12-sink fan-out: every sink directory lands with exactly its own rows
+    (no cross-sink leakage out of the one write job)."""
     from pyspark.sql import functions as F
 
     from shovel_spark.io.sinks import write_sinks
@@ -183,13 +182,51 @@ def test_write_sinks_wide_fanout_max_workers(spark, tmp_path):
     df = spark.range(1200).select(
         F.col("id"), F.concat(F.lit("s"), F.lpad((F.col("id") % 12).cast("string"), 2, "0")).alias("sink")
     )
-    paths = write_sinks(df, str(tmp_path / "wide"), sinks, max_workers=12)
+    paths = write_sinks(df, str(tmp_path / "wide"), sinks)
     assert set(paths) == set(sinks)
     for name in sinks:
         got = spark.read.parquet(paths[name])
         rows = got.select("id").collect()
         assert len(rows) == 100
         assert all(r.id % 12 == int(name[1:]) for r in rows)
+
+
+def test_write_sinks_one_job_in_every_mode(spark, tmp_path):
+    """Every write_sinks call is ONE write job, whatever its mode. A
+    partitioned overwrite replaces only the partitions it writes and keeps
+    the others; an append keeps the rows already there; a plain overwrite
+    replaces the sink. Sink "a" holds the even ids, "b" the odd ones."""
+    import os
+
+    from shovel_spark.io.sinks import STAGE_DIR, write_sinks
+
+    st = spark.sparkContext.statusTracker()
+
+    def write(ids, out, **kw):
+        df = spark.createDataFrame([(i, i % 4, "ab"[i % 2]) for i in ids], "id long, bucket int, sink string")
+        before = len(st.getJobIdsForGroup(None))
+        paths = write_sinks(df, str(tmp_path / out), ["a", "b"], **kw)
+        assert len(st.getJobIdsForGroup(None)) - before == 1, kw
+        assert not os.path.exists(tmp_path / out / STAGE_DIR)
+        return {n: sorted(r.id for r in spark.read.parquet(p).select("id").collect())
+                for n, p in paths.items()}
+
+    def split(ids):
+        return {n: sorted(i for i in ids if "ab"[i % 2] == n) for n in "ab"}
+
+    write(range(40), "part", partition_cols=["bucket"])
+    new = [i for i in range(100, 120) if i % 4 < 2]  # buckets 0 and 1 only
+    kept = [i for i in range(40) if i % 4 >= 2]
+    assert write(new, "part", partition_cols=["bucket"]) == split(kept + new)
+    assert write(range(200, 204), "part", partition_cols=["bucket"], mode="append") == split(
+        kept + new + list(range(200, 204)))
+    assert sorted(os.listdir(tmp_path / "part" / "sink_a")) == ["bucket=0", "bucket=2"]
+
+    write(range(10), "append", mode="append")
+    assert write(range(10, 20), "append", mode="append") == split(range(20))
+    write(range(10), "plain")
+    assert write(range(50, 60), "plain") == split(range(50, 60))
+    assert write(range(10), "leaf", leaf="run=r1") == split(range(10))
 
 
 def test_write_sinks_leaf_one_job(spark, tmp_path):

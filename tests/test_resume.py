@@ -7,6 +7,7 @@ resuming; the final sink tables and ledger must equal a single-shot run.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -131,45 +132,105 @@ def test_per_sink_metrics_survive_resume(spark, tmp_path):
     assert len(got) >= 3
 
 
-def test_bucketed_resume_prunes_at_scan(spark, tmp_path):
-    """Scan-level resume: over a bucket-partitioned ingest, done buckets are
-    eliminated by parquet partition pruning (PartitionFilters), not a
-    post-read filter — zero I/O for completed work."""
-    from shovel_spark.pipeline import (
-        JobConfig,
-        build_routed,
-        ingest_bucketed,
-        read_bucketed,
-        run_resumable,
-        run_resumable_bucketed,
-    )
+def _traced_call(spark, monkeypatch, call):
+    """Run ``call()``; return (its result, the physical plans of the sink
+    writes it executed, the analyzed plan of the frame it handed to
+    write_sinks)."""
+    from shovel_spark import pipeline
+
+    frames, real = [], pipeline.write_sinks
+
+    def spy(df, *args, **kwargs):
+        frames.append(df)
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_sinks", spy)
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():  # the retained ones: the UI keeps only the latest
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    seen = max((e.executionId() for e in executions()), default=-1)
+    result = call()
+    monkeypatch.undo()
+    plans = [e.physicalPlanDescription() for e in executions()
+             if e.executionId() > seen and e.description().startswith("save")]
+    return result, plans, _plan_text(frames[0])
+
+
+def _plan_text(df):
+    """The analyzed plan with expression and plan ids stripped."""
+    return re.sub(r"(#|plan_id=)\d+", "", df._jdf.queryExecution().analyzed().toString())
+
+
+def test_bucketed_resume_prunes_at_scan(spark, tmp_path, monkeypatch):
+    """Scan-level resume: ``run_resumable`` over a bucket-partitioned ingest
+    eliminates done buckets by parquet partition pruning (PartitionFilters
+    in the plan the resume executes), not a post-read filter — zero I/O
+    for completed work. An unbucketed source keeps its plan: the filter on
+    the computed hash, above an unpruned scan."""
+    from shovel_spark.pipeline import build_routed, ingest_bucketed
+
+    pages, lm, dr = _inputs(spark)
+    ingest, plain = str(tmp_path / "ingest"), str(tmp_path / "pages")
+    ingest_bucketed(pages, ingest, n_buckets=B)
+    pages.write.parquet(plain)  # the CLI's source
+
+    filters, pending = {}, {}
+    for tag, path in (("bucketed", ingest), ("plain", plain)):
+        source = spark.read.parquet(path)
+        cfg = JobConfig(out_dir=str(tmp_path / tag), n_buckets=B)
+        r1 = run_resumable(spark, source, lm, dr, cfg, max_buckets=3)
+        r2, plans, pending[tag] = _traced_call(
+            spark, monkeypatch, lambda: run_resumable(spark, source, lm, dr, cfg))
+        assert r2["skipped_buckets"] == r1["processed_buckets"]
+        assert len(plans) == 1  # one write job for every sink
+        scan = re.search(r"\(\d+\) Scan parquet.*?\n\n", plans[0], re.S).group(0)
+        filters[tag] = re.findall(r"PartitionFilters: \[(.+)\]", scan)
+    done = r1["processed_buckets"]
+
+    [bucketed] = filters["bucketed"]
+    assert "bucket" in bucketed and f"IN ({','.join(map(str, done))})" in bucketed
+    assert filters["plain"] == []
+    want = build_routed(spark.read.parquet(plain), lm, dr, cfg).filter(~F.col("bucket").isin(done))
+    assert pending["plain"] == _plan_text(want)
+
+    # equality with the plain (unbucketed) path
+    for sink in cfg.sinks:
+        assert (_sink_urls(spark, str(tmp_path / "bucketed"), sink)
+                == _sink_urls(spark, str(tmp_path / "plain"), sink))
+
+
+def test_bucketed_ingest_of_another_bucket_count_commits_nothing(spark, tmp_path):
+    """A bucketed ingest made with 2B buckets, run with B: the crash call
+    and the resume both read rows of buckets outside range(B) and fail with
+    a ValueError before their ledger append, so no bucket is committed with
+    part of its rows. The same out dir then completes from the plain pages
+    exactly like an uninterrupted run."""
+    from shovel_spark.ledger import read_done_buckets
+    from shovel_spark.pipeline import ingest_bucketed, sink_metrics_from_buckets
 
     pages, lm, dr = _inputs(spark)
     ingest = str(tmp_path / "ingest")
-    ingest_bucketed(pages, ingest, n_buckets=B)
-
+    ingest_bucketed(pages, ingest, n_buckets=2 * B)
     cfg = JobConfig(out_dir=str(tmp_path / "out"), n_buckets=B)
-    r1 = run_resumable_bucketed(spark, ingest, lm, dr, cfg, max_buckets=3)
-    assert len(r1["processed_buckets"]) == 3
-    r2 = run_resumable_bucketed(spark, ingest, lm, dr, cfg)
-    assert r2["skipped_buckets"] == r1["processed_buckets"]
+    for kw in ({"max_buckets": 3}, {}):
+        with pytest.raises(ValueError, match=rf"outside this run's range\({B}\)"):
+            run_resumable(spark, spark.read.parquet(ingest), lm, dr, cfg, **kw)
+        assert read_done_buckets(spark, os.path.join(cfg.out_dir, "ledger")) == set()
 
-    # equality with the plain (unbucketed) path
+    run_resumable(spark, pages, lm, dr, cfg)
     golden = JobConfig(out_dir=str(tmp_path / "golden"), n_buckets=B)
     run_resumable(spark, pages, lm, dr, golden)
-    for sink in cfg.sinks:
-        assert _sink_urls(spark, cfg.out_dir, sink) == _sink_urls(spark, golden.out_dir, sink)
-
-    # plan proof: the resume filter appears as a partition filter on the scan
-    done = set(r1["processed_buckets"])
-    pruned = read_bucketed(spark, ingest).filter(~F.col("bucket").isin(sorted(done)))
-    plan = pruned._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "PartitionFilters" in plan
-    scan = plan[plan.index("Scan parquet"):]
-    pf_line = [l for l in scan.splitlines() if "PartitionFilters" in l][0]
-    assert "bucket" in pf_line and "PartitionFilters: []" not in pf_line
+    assert _unacked_leaves(spark, cfg.out_dir) == []
+    assert _sink_url_sets(spark, cfg.out_dir) == _sink_url_sets(spark, golden.out_dir)
+    got, want = (metrics_from_ledger(spark, c.out_dir).first() for c in (cfg, golden))
+    assert got.in_rows == want.in_rows == N
+    assert (got.acked, got.ignored, got.rejected) == (want.acked, want.ignored, want.rejected)
+    assert ({tuple(r) for r in sink_metrics_from_buckets(spark, cfg.out_dir).collect()}
+            == {tuple(r) for r in sink_metrics_from_buckets(spark, golden.out_dir).collect()})
+    _assert_metrics_match_sinks(spark, cfg.out_dir)
 
 
 def test_throttle_pacing_progresses_past_empty_buckets(spark, tmp_path):
@@ -602,16 +663,17 @@ def test_replay_that_empties_dead_letters(spark, tmp_path):
 
 
 def test_bucketed_run_then_replay_metrics_match_sinks(spark, tmp_path):
-    """run_resumable_bucketed commits metrics_by_bucket like run_resumable,
-    so sink_metrics_from_buckets holds after the run and after a replay."""
-    from shovel_spark.pipeline import ingest_bucketed, replay_dead_letters, run_resumable_bucketed
+    """A run over a bucketed ingest commits metrics_by_bucket like one over
+    plain pages, so sink_metrics_from_buckets holds after the run and after
+    a replay."""
+    from shovel_spark.pipeline import ingest_bucketed, replay_dead_letters
 
     pages, lm, dr = _inputs(spark)
     ingest = str(tmp_path / "ingest")
     ingest_bucketed(pages, ingest, n_buckets=B)
     cfg = JobConfig(out_dir=str(tmp_path / "out"), n_buckets=B)
-    run_resumable_bucketed(spark, ingest, lm, dr, cfg, max_buckets=3)
-    run_resumable_bucketed(spark, ingest, lm, dr, cfg)
+    run_resumable(spark, spark.read.parquet(ingest), lm, dr, cfg, max_buckets=3)
+    run_resumable(spark, spark.read.parquet(ingest), lm, dr, cfg)
     _assert_metrics_match_sinks(spark, cfg.out_dir)
     res = replay_dead_letters(spark, pages, lm, dr.withColumn("action", F.lit("allow")), cfg)
     assert res["recovered"] > 0

@@ -59,15 +59,17 @@ def test_broadcast_rejected_only_dead_letter(enriched):
 
 
 def test_write_sinks_broadcast_row_in_every_matching_dir(spark, tmp_path):
-    """Broadcast-mode writer: a row matching k sink predicates lands in all
-    k sink directories (reference: src/outputs/pipeline.js mode=broadcast)."""
-    from shovel_spark.io.sinks import write_sinks_broadcast
+    """Broadcast mode through the one writer: exploding the row's ``sinks``
+    into ``sink`` lands a row matching k sink predicates in all k sink
+    directories (reference: src/outputs/pipeline.js mode=broadcast)."""
+    from shovel_spark.io.sinks import write_sinks
 
     df = spark.createDataFrame(
         [("u1", ["a", "b"]), ("u2", ["b"]), ("u3", [])],
         "url string, sinks array<string>",
     )
-    paths = write_sinks_broadcast(df, str(tmp_path / "bc"), ["a", "b"], output_cols=["url"])
+    per_sink = df.select("url", F.explode("sinks").alias("sink"))
+    paths = write_sinks(per_sink, str(tmp_path / "bc"), ["a", "b"], output_cols=["url"])
     a = {r.url for r in spark.read.parquet(paths["a"]).collect()}
     b = {r.url for r in spark.read.parquet(paths["b"]).collect()}
     assert a == {"u1"} and b == {"u1", "u2"}
